@@ -38,6 +38,10 @@ USERS_ROW_SCHEMA = StructType(
     [StructField("id", LongType()), StructField("full_name", StringType())]
 )
 
+#: Spark-side users row payload, rendered by synth_cdc_stream and
+#: cdc_two_table_join
+_USERS_ROW_SQL = "named_struct('id', user_id, 'full_name', props)"
+
 #: shared op-code mapping used by the CDC-synthesis queries and their
 #: oracles: click/signup→c, purchase→u, view→r (snapshot), error→d.
 _OP_SQL = (
@@ -106,10 +110,7 @@ def synth_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON rendering is codec-bound: spread an under-parallel scan so
     # the encode uses every core (no-op at real scale / many splits)
     ev = spread_scan(load_table(spark, sf_dir, "events"))
-    return ev.selectExpr(
-        _envelope_sql("named_struct('id', user_id, 'full_name', props)", "users")
-        + " AS value"
-    )
+    return ev.selectExpr(_envelope_sql(_USERS_ROW_SQL, "users") + " AS value")
 
 
 def _flat_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,6 +618,14 @@ _COLOR_SQL = (
     "ELSE 'yellow' END"
 )
 
+#: Spark-side colors row payload, its color derived as `_COLOR_SQL`
+#: does; rendered by synth_colors_stream and cdc_two_table_join
+_COLORS_ROW_SQL = (
+    "named_struct('user_id', user_id, 'favorite_color', "
+    "element_at(array('red', 'green', 'blue', 'yellow'), "
+    "cast(cast(floor(abs(value)) as bigint) % 4 as int) + 1))"
+)
+
 _FLAT_COLORS_SQL = f"""
     SELECT {_OP_SQL} AS op,
            'schema' || CAST(user_id % 4 + 1 AS VARCHAR) AS pgschema,
@@ -636,17 +645,7 @@ def synth_colors_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spread_scan(load_table(spark, sf_dir, "events"))
     # favorite_color = deterministic pick from the event value; whole
     # envelope rendered as SQL text (see `_envelope_sql`)
-    color_sql = (
-        "element_at(array('red', 'green', 'blue', 'yellow'), "
-        "cast(cast(floor(abs(value)) as bigint) % 4 as int) + 1)"
-    )
-    return ev.selectExpr(
-        _envelope_sql(
-            f"named_struct('user_id', user_id, 'favorite_color', {color_sql})",
-            "user_favorite_colors",
-        )
-        + " AS value"
-    )
+    return ev.selectExpr(_envelope_sql(_COLORS_ROW_SQL, "user_favorite_colors") + " AS value")
 
 
 @register(
@@ -693,18 +692,9 @@ def cdc_two_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.envelope import envelope_schema
 
     ev = spread_scan(load_table(spark, sf_dir, "events"))
-    color_sql = (
-        "element_at(array('red', 'green', 'blue', 'yellow'), "
-        "cast(cast(floor(abs(value)) as bigint) % 4 as int) + 1)"
-    )
     wire2 = ev.selectExpr(
-        _envelope_sql("named_struct('id', user_id, 'full_name', props)", "users")
-        + " AS u_value",
-        _envelope_sql(
-            f"named_struct('user_id', user_id, 'favorite_color', {color_sql})",
-            "user_favorite_colors",
-        )
-        + " AS c_value",
+        _envelope_sql(_USERS_ROW_SQL, "users") + " AS u_value",
+        _envelope_sql(_COLORS_ROW_SQL, "user_favorite_colors") + " AS c_value",
     )
     parsed2 = wire2.select(
         F.from_json("u_value", envelope_schema(USERS_ROW_SCHEMA)).alias("_u"),

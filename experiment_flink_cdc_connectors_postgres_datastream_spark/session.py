@@ -4,9 +4,8 @@ The reference builds a ``StreamExecutionEnvironment``
 (StreamingJobWithCustomDeserializer.java:44); our analog is a
 SparkSession with scale-oriented defaults: AQE (runtime re-planning +
 skew-join handling), UTC session time, Arrow for any pandas exchange,
-and the legacy parquet nanos-as-long switch needed to read
-nanosecond-precision parquet timestamps (Spark has no ns timestamp
-type; we truncate to microseconds exactly like DuckDB does).
+and the parquet timestamp switches that undeclared reads (state store,
+bus spool) rely on.
 """
 
 from __future__ import annotations
@@ -19,8 +18,10 @@ from pyspark.sql import SparkSession
 #: correctness driver builds its own session, so everything here must
 #: be dynamic, not static, conf).
 RUNTIME_CONFS: dict[str, str] = {
-    # events.parquet stores TIMESTAMP(NANOS) which Spark rejects by
-    # default; read as long and convert (io.load_table).
+    # Spark has no ns timestamp type and rejects parquet TIMESTAMP(NANOS)
+    # by default; read such columns as long instead. The testdata is
+    # µs and io.load_table declares its schemas, so only undeclared
+    # reads (state store, spool) can meet this.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Naive (no-UTC-flag) parquet timestamps read as TIMESTAMP (LTZ)
     # rather than TIMESTAMP_NTZ: under the UTC session timezone this is

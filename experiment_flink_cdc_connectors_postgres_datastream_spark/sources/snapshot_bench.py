@@ -292,9 +292,7 @@ class ParquetWalClient:
         instead of a DuckDB sort plus a re-render — peek semantics
         are identical, records are served read-only."""
         if self._feed is None:
-            self._feed = _render_feed(
-                _feed_tuples(self.path, include_inserts=True), self.table
-            )
+            self._feed = _render_feed(_feed_tuples(self.path, include_inserts=True))
         return _feed_slice(self._feed, self.table, self.confirmed, limit)
 
 
@@ -365,7 +363,7 @@ def _feed_slice(
 
 
 def _render_feed(
-    rows: list[tuple], table: str
+    rows: list[tuple],
 ) -> tuple[list[int], list[tuple], list[dict[str, Any] | None]]:
     """Wrap LSN-ordered feed tuples as the (lsns, rows, rendered)
     arrays `_feed_slice` bisects; rendering happens per served slice
@@ -433,9 +431,7 @@ class ParquetCdcBenchClient(ParquetSnapshotClient):
         # same per-instance rendered-feed cache as ParquetWalClient —
         # the feed is immutable for a given parquet path
         if self._feed is None:
-            self._feed = _render_feed(
-                _feed_tuples(self.path, include_inserts=False), self.table
-            )
+            self._feed = _render_feed(_feed_tuples(self.path, include_inserts=False))
         return _feed_slice(self._feed, self.table, self.confirmed, limit)
 
 
