@@ -60,7 +60,7 @@ def shingle_hashes(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
+    n: int | tuple[int, ...] = 3,
     distinct: bool = True,
     hash_family: str = "xx",
 ) -> DataFrame:
@@ -68,6 +68,10 @@ def shingle_hashes(
     with ``_sh = xxhash64(tok_i, …, tok_{i+n-1})`` (or, with
     ``hash_family="md5"``, :func:`md5_long` of the space-joined gram —
     the oracle-gradeable family).
+
+    A tuple ``n`` (e.g. ``(1, 2)``) emits the grams of every listed
+    order from the same token pass and window: the union of the
+    single-order outputs, at one scan and one shuffle.
 
     Hot-path formulation: posexplode tokens → per-document window
     ``lead`` → one multi-column hash — everything whole-stage
@@ -85,14 +89,27 @@ def shingle_hashes(
         F.col(id_col).alias("_id"), F.posexplode(tokens(F.col(text_col))).alias("_pos", "_tok")
     )
     w = Window.partitionBy("_id").orderBy("_pos")
-    leads = [F.lead("_tok", j).over(w) for j in range(1, n)]
-    if hash_family == "md5":
-        gram_hash = md5_long(F.concat_ws(" ", F.col("_tok"), *leads))
+    orders = (n,) if isinstance(n, int) else n
+    leads = [F.lead("_tok", j).over(w) for j in range(1, max(orders))]
+
+    def gram_hash(gram: list[Column]) -> Column:
+        return md5_long(F.concat_ws(" ", *gram)) if hash_family == "md5" else F.xxhash64(*gram)
+
+    if len(orders) == 1:
+        sh = tok.select(
+            "_id", gram_hash([F.col("_tok"), *leads]).alias("_sh"), leads[-1].isNotNull().alias("_full") if leads else F.lit(True).alias("_full")
+        ).filter(F.col("_full")).select("_id", "_sh")
     else:
-        gram_hash = F.xxhash64(F.col("_tok"), *leads)
-    sh = tok.select(
-        "_id", gram_hash.alias("_sh"), leads[-1].isNotNull().alias("_full") if leads else F.lit(True).alias("_full")
-    ).filter(F.col("_full")).select("_id", "_sh")
+        # materialize the leads first: a generator cannot hold window
+        # expressions. A gram whose last token is a NULL lead runs past
+        # the document end, so it is emitted as NULL and dropped.
+        tok = tok.select("_id", "_tok", *[ld.alias(f"_l{j}") for j, ld in enumerate(leads, 1)])
+        toks = [F.col("_tok"), *[F.col(f"_l{j}") for j in range(1, max(orders))]]
+        grams = [
+            gram_hash(toks[:k]) if k == 1 else F.when(toks[k - 1].isNotNull(), gram_hash(toks[:k]))
+            for k in orders
+        ]
+        sh = tok.select("_id", F.explode(F.array(*grams)).alias("_sh")).filter(F.col("_sh").isNotNull())
     return sh.dropDuplicates(["_id", "_sh"]) if distinct else sh
 
 

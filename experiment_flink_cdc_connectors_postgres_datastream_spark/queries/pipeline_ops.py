@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from experiment_flink_cdc_connectors_postgres_datastream_spark.io import load_table
 from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.chunking import chunk_documents, pack_sequences
-from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import contamination_check
+from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import contamination_check, shingle_hashes
 from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.temporal import interval_join
 from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.text import (
     GOPHER_MAX_MEAN_WORD_LEN,
@@ -889,39 +889,11 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc weight sum — no corpus-size join keyed on anything but
     hashes, no windows. The bucket count (not vocabulary size) bounds
     every model table, which is the point of hashed DSIR at 100 TB."""
-    from pyspark.sql.window import Window
-
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import md5_long
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
-    # ONE tokenize+explode pass emits BOTH gram orders (the previous
-    # union of shingle_hashes(n=1) and shingle_hashes(n=2) scanned and
-    # tokenized the corpus twice; same (doc, gram-hash) multiset —
-    # exceptAll = 0 both ways — one corpus pass instead of two,
-    # identical window shuffle volume). The bigram needs the per-doc
-    # lead; the unigram rides the same exploded rows for free.
-    tok = docs.select(
-        F.col("doc_id").alias("_id"),
-        F.posexplode(tokens(F.col("text"))).alias("_pos", "_tok"),
-    )
-    w = Window.partitionBy("_id").orderBy("_pos")
-    tok2 = tok.select("_id", "_tok", F.lead("_tok", 1).over(w).alias("_next"))
-    feats = (
-        tok2.select(
-            "_id",
-            F.explode(
-                F.array(
-                    md5_long(F.concat_ws(" ", F.col("_tok"))),
-                    F.when(
-                        F.col("_next").isNotNull(),
-                        md5_long(F.concat_ws(" ", F.col("_tok"), F.col("_next"))),
-                    ),
-                )
-            ).alias("_sh"),
-        )
-        .filter(F.col("_sh").isNotNull())
-        .select("_id", F.pmod(F.col("_sh"), F.lit(1024)).alias("b"))
+    # unigram and bigram occurrences from ONE tokenize pass and one
+    # window shuffle (shingle_hashes' multi-order form)
+    feats = shingle_hashes(docs, n=(1, 2), distinct=False, hash_family="md5").select(
+        "_id", F.pmod(F.col("_sh"), F.lit(1024)).alias("b")
     )
     # (doc, bucket) occurrence counts: the one corpus-size shuffle.
     # Lazy localCheckpoint: db feeds the target model, the raw model

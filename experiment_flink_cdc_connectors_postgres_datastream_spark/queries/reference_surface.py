@@ -547,7 +547,7 @@ def sql_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_live_count_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship live count through a CUSTOM STATEFUL OPERATOR
-    (`streaming.live_count_with_state`, applyInPandasWithState): the
+    (`streaming.live_count_with_state`): the
     keyed-state mapping of the reference's KeyedProcessFunction +
     changelog COUNT (SJCD:83,194,204-218), hash-matched against the
     same batch oracle as `cdc_pipeline` — so the driver grades that

@@ -1,37 +1,28 @@
 """Streaming changelog materialization: the continuous analog of
 ``cdc.changelog`` (SURVEY.md §2.3 A1/A3).
 
-Two strategies, both exactly-once with a checkpoint location:
-
-1. ``stream_compact_latest`` — per-key latest-row state via
-   ``applyInPandasWithState`` (update-mode stream of changed latest
-   rows). State is partitioned by the upsert key — the same hash
-   shuffle the reference's ``keyBy``
-   (StreamingJobWithCustomDeserializer.java:83) implies — and never
-   expires, matching the reference's idle-state-retention-0 config
-   (sql-client-conf.yaml:16-17).
-
-2. ``run_compacted_aggregate`` — ``foreachBatch``: merge each
-   micro-batch into a compacted state table (bucketed generational
-   parquet, :mod:`.statestore`), recompute the grouped aggregate, and
-   hand the refreshed aggregate to a sink callback (our JDBC-upsert
-   path, K3). A micro-batch rewrites only the key-hash buckets it
-   touches and publishes via an atomic manifest flip — per-batch
-   write I/O is O(touched keys' buckets), not O(total state), and a
-   crash mid-write leaves the previous state generation intact.
+``run_compacted_aggregate`` — ``foreachBatch``, exactly-once with a
+checkpoint location: merge each micro-batch into a compacted state
+table (bucketed generational parquet, :mod:`.statestore`), recompute
+the grouped aggregate, and hand the refreshed aggregate to a sink
+callback (our JDBC-upsert path, K3). A micro-batch rewrites only the
+key-hash buckets it touches and publishes via an atomic manifest flip
+— per-batch write I/O is O(touched keys' buckets), not O(total
+state), and a crash mid-write leaves the previous state generation
+intact. State is partitioned by the upsert key — the same hash the
+reference's ``keyBy`` (StreamingJobWithCustomDeserializer.java:83)
+implies — and never expires unless a TTL is opted into, matching the
+reference's idle-state-retention-0 config (sql-client-conf.yaml:16-17).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
-from typing import Any
+from collections.abc import Callable
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame
 
 from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog import (
     DELETE_OP,
@@ -42,7 +33,6 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_t
 from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
 
 
-
 def merge_latest(
     batch: pd.DataFrame,
     prev: tuple | None,
@@ -51,9 +41,12 @@ def merge_latest(
     unavailable_col: str | None = None,
     op_col: str | None = None,
 ) -> pd.Series:
-    """Latest-row merge shared by both stateful backends: restored
-    state (if any) sorts FIRST under a stable sort, so an equal seq
-    from the new batch wins (arrival order within a batch).
+    """Pandas reference fold for latest-per-key compaction — the
+    independent model the SQL path (``resolve_unavailable`` +
+    ``compact_latest`` in :func:`run_compacted_aggregate`) is tested
+    against. Restored state (if any) sorts FIRST under a stable sort,
+    so an equal seq from the new batch wins (arrival order within a
+    batch).
 
     ``unavailable_col`` names the envelope's TOAST column-name list
     (see ``cdc.changelog.resolve_unavailable``): a row listing a
@@ -85,56 +78,6 @@ def merge_latest(
         if op_col is None or r.get(op_col) != DELETE_OP:
             prev_row = r
     return pd.Series([rows[-1][c] for c in cols], index=cols)
-
-
-def stream_compact_latest(
-    df: DataFrame,
-    key_cols: list[str],
-    seq_cols: list[str],
-    op_col: str | None = None,
-    unavailable_col: str | None = None,
-) -> DataFrame:
-    """Continuous latest-per-key compaction over a CDC stream.
-
-    Emits, per micro-batch, the new latest row of every key that
-    changed (update-mode changelog of the materialized upsert table).
-    Tombstones: when the latest event for a key has op 'd', the key's
-    row is emitted with ``_live = false`` so downstream can retract;
-    live rows carry ``_live = true``.
-
-    ``unavailable_col``: pass the envelope's TOAST marker list column
-    when the table has TOAST-able columns — marked columns resolve
-    from per-key state instead of overwriting with NULL (see
-    ``merge_latest``); state stores resolved rows, so the carry holds
-    across micro-batches and restarts.
-    """
-    out_schema = StructType.fromJson(df.schema.jsonValue())
-    out_schema = out_schema.add("_live", "boolean")
-    state_schema = StructType.fromJson(df.schema.jsonValue())
-    cols = df.columns
-
-    def update(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        latest = merge_latest(
-            batch,
-            tuple(state.get) if state.exists else None,
-            cols,
-            seq_cols,
-            unavailable_col=unavailable_col,
-            op_col=op_col,
-        )
-        state.update(tuple(latest[c] for c in cols))
-        out = pd.DataFrame([tuple(latest[c] for c in cols)], columns=cols)
-        out["_live"] = bool(op_col is None or latest[op_col] != DELETE_OP)
-        yield out
-
-    return df.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def run_compacted_aggregate(
@@ -259,71 +202,3 @@ def run_compacted_aggregate(
         .option("checkpointLocation", checkpoint_dir or os.path.join(state_dir, "checkpoint"))
     )
     return writer.start()
-
-
-def stream_compact_latest_tws(
-    df: DataFrame,
-    key_cols: list[str],
-    seq_cols: list[str],
-    op_col: str | None = None,
-    unavailable_col: str | None = None,
-) -> DataFrame:
-    """:func:`stream_compact_latest` on the Spark 4 ``StatefulProcessor``
-    API (``transformWithStateInPandas``) — the forward path for custom
-    stateful operators: typed per-key state variables (RocksDB-backed on
-    a cluster), optional TTL/timers, and *multiple* state variables per
-    key where ``applyInPandasWithState`` allows exactly one.
-
-    Keeps two states per upsert key: the latest row (ValueState) and a
-    lifetime change counter (second ValueState), emitted as
-    ``_n_changes`` next to the ``_live`` flag — the per-key audit
-    column a CDC consumer uses to detect replay/out-of-order anomalies.
-
-    Runtime requirement: the ``protobuf`` Python package (the state
-    server speaks protobuf); environments without it should use
-    :func:`stream_compact_latest`, which is protocol-free.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    cols = df.columns
-    out_schema = StructType.fromJson(df.schema.jsonValue())
-    out_schema = out_schema.add("_live", "boolean").add("_n_changes", "long")
-    state_schema = StructType.fromJson(df.schema.jsonValue())
-
-    class LatestRowProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState("latest", state_schema)
-            self._changes = handle.getValueState("n_changes", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            batch = pd.concat(list(rows), ignore_index=True)
-            n_new = len(batch)
-            prev = tuple(self._latest.get()) if self._latest.exists() else None
-            n_before = (
-                int(self._changes.get()[0])
-                if prev is not None and self._changes.exists()
-                else 0
-            )
-            latest = merge_latest(
-                batch, prev, cols, seq_cols,
-                unavailable_col=unavailable_col, op_col=op_col,
-            )
-            self._latest.update(tuple(latest[c] for c in cols))
-            self._changes.update((n_before + n_new,))
-            out = pd.DataFrame([tuple(latest[c] for c in cols)], columns=cols)
-            out["_live"] = bool(op_col is None or latest[op_col] != DELETE_OP)
-            out["_n_changes"] = n_before + n_new
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*[F.col(k) for k in key_cols]).transformWithStateInPandas(
-        LatestRowProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

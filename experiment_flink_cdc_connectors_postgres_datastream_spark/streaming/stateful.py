@@ -13,13 +13,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-try:  # pyspark >= 3.4
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    HAS_GROUP_STATE = True
-except ImportError:  # pragma: no cover
-    HAS_GROUP_STATE = False
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 #: register value: (seq tuple, live?)
@@ -100,9 +94,6 @@ def live_count_with_state(
       keyed by the PK — the per-key-state trade Flink makes) instead
       of silently degrading into an unbounded single state row.
     """
-    if not HAS_GROUP_STATE:  # pragma: no cover
-        raise ImportError("applyInPandasWithState requires pyspark >= 3.4")
-
     seq = list(seq_cols)
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):

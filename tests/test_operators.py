@@ -14,6 +14,7 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup i
     minhash_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    shingle_hashes,
     simhash_near_pairs,
     simhash_signatures,
 )
@@ -72,6 +73,29 @@ def test_simhash_identical_docs_distance_zero(spark, docs):
     assert sigs[1] == sigs[4]
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_near_pairs(docs).collect()}
     assert pairs.get((1, 4)) == 0
+
+
+@pytest.mark.parametrize("hash_family", ["xx", "md5"])
+def test_shingle_hashes_multi_order_is_union_of_single_orders(spark, docs, hash_family):
+    """A tuple ``n`` emits, per document, exactly the grams of each
+    listed order as the single-order calls would — including docs too
+    short for the higher orders, whose run-off grams must drop."""
+    from collections import Counter
+
+    short = spark.createDataFrame([(5, "one"), (6, "two words"), (7, "")], "doc_id long, text string")
+    both = docs.unionByName(short)
+
+    def bag(df):
+        return Counter((r["_id"], r["_sh"]) for r in df.collect())
+
+    for distinct in (False, True):
+        got = bag(shingle_hashes(both, n=(1, 2, 3), distinct=distinct, hash_family=hash_family))
+        want = Counter()
+        for k in (1, 2, 3):
+            want += bag(shingle_hashes(both, n=k, distinct=distinct, hash_family=hash_family))
+        if distinct:
+            want = Counter(set(want))
+        assert got == want, (distinct, got - want, want - got)
 
 
 def test_ngram_jaccard_exact_values(docs):

@@ -30,10 +30,7 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc import parse_
 from experiment_flink_cdc_connectors_postgres_datastream_spark.queries.reference_surface import USERS_ROW_SCHEMA
 from experiment_flink_cdc_connectors_postgres_datastream_spark.sinks import ParquetUpsertSink, route_foreach_batch
 from experiment_flink_cdc_connectors_postgres_datastream_spark.sources import read_cdc_file_stream
-from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming import (
-    run_compacted_aggregate,
-    stream_compact_latest,
-)
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming import run_compacted_aggregate
 from tests.golden_cdc import (
     EXPECTED_COUNTS_AFTER_DELETE,
     WITH_SNAPSHOT_AND_DELETE,
@@ -77,29 +74,15 @@ def test_foreachbatch_compacted_aggregate_matches_batch(spark, cdc_dir, tmp_path
     q.stop()
     result = {r["schema"]: r["user_count"] for r in sink.read(spark).collect()}
     assert result == EXPECTED_COUNTS_AFTER_DELETE
+    # golden final row per key in the materialized upsert table
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
 
-
-def test_stream_compact_latest_state_updates(spark, cdc_dir):
-    stream = read_cdc_file_stream(spark, cdc_dir, max_files_per_trigger=1)
-    flat = _flat_users(stream).select("key", "op", "schema", "ts_ms", "lsn", "full_name")
-    compacted = stream_compact_latest(flat, ["key"], ["ts_ms", "lsn"], op_col="op")
-    q = (
-        compacted.writeStream.format("memory")
-        .queryName("compacted_mem")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM compacted_mem").collect()
-    # final state per key = last emitted row for that key
-    final: dict[str, tuple] = {}
-    for r in rows:
-        final[r["key"]] = (r["full_name"], r["_live"])
-    assert final["schema1|1"] == ("sue smith", True)
-    assert final["schema2|1"] == ("bobby smith", True)
-    assert final["schema1|2"][1] is False          # tombstoned
-    assert final["schema3|7"] == ("snap shot", True)  # snapshot row live
+    store = GenerationalStateStore(spark, str(tmp_path / "state" / "state"), ["key"])
+    final = {r["key"]: (r["full_name"], r["op"]) for r in store.read().collect()}
+    assert final["schema1|1"] == ("sue smith", "u")
+    assert final["schema2|1"] == ("bobby smith", "u")
+    assert final["schema1|2"][1] == "d"  # tombstone kept in state
+    assert final["schema3|7"] == ("snap shot", "r")  # live snapshot row
 
 
 def test_route_foreach_batch_single_pass_multi_sink(spark, cdc_dir, tmp_path):
@@ -158,56 +141,10 @@ def test_streaming_tumbling_window(spark, tmp_path):
     assert got == {(0, "a"): 2, (5, "b"): 1, (5, "a"): 1}
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs the protobuf package for its "
-    "state-server protocol; not installed in this container",
-)
-def test_stream_compact_latest_tws_matches_legacy(spark, cdc_dir):
-    """transformWithStateInPandas compaction (StatefulProcessor API)
-    reaches the same final per-key state as the applyInPandasWithState
-    path, and its second state variable counts changes per key."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import stream_compact_latest_tws
-
-    stream = read_cdc_file_stream(spark, cdc_dir, max_files_per_trigger=1)
-    flat = _flat_users(stream).select("key", "op", "schema", "ts_ms", "lsn", "full_name")
-    compacted = stream_compact_latest_tws(flat, ["key"], ["ts_ms", "lsn"], op_col="op")
-    q = (
-        compacted.writeStream.format("memory")
-        .queryName("compacted_tws_mem")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM compacted_tws_mem").collect()
-    final: dict[str, tuple] = {}
-    changes: dict[str, int] = {}
-    for r in rows:
-        final[r["key"]] = (r["full_name"], r["_live"])
-        changes[r["key"]] = max(changes.get(r["key"], 0), r["_n_changes"])
-    assert final["schema1|1"] == ("sue smith", True)
-    assert final["schema2|1"] == ("bobby smith", True)
-    assert final["schema1|2"][1] is False
-    assert final["schema3|7"] == ("snap shot", True)
-    # schema1|1 sees insert + update across the fixture
-    assert changes["schema1|1"] >= 2
-    assert all(n >= 1 for n in changes.values())
-
-
 def test_merge_latest_semantics():
-    """Direct unit test of the merge shared by both stateful
-    backends: highest seq wins; on seq ties the NEW batch row beats
-    restored state (arrival order)."""
+    """Direct unit test of the pandas reference fold the SQL
+    compaction path is tested against: highest seq wins; on seq ties
+    the NEW batch row beats restored state (arrival order)."""
     import pandas as pd
 
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import merge_latest
@@ -776,29 +713,6 @@ def _toast_flat(spark, path):
     )
 
 
-def test_stream_compact_latest_resolves_toast_across_batches(spark, toast_cdc_dir):
-    path, big = toast_cdc_dir
-    flat = _toast_flat(spark, path)
-    compacted = stream_compact_latest(
-        flat, ["id"], ["ts_ms", "lsn"], op_col="op", unavailable_col="unavailable"
-    )
-    q = (
-        compacted.writeStream.format("memory")
-        .queryName("toast_mem")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}
-    for r in spark.sql("SELECT * FROM toast_mem ORDER BY lsn").collect():
-        final[r["id"]] = (r["n"], r["body"])
-    # id 1: update marked body unavailable -> carried from batch-1 state
-    assert final[1] == (2, big)
-    # id 2: REAL null update must still win (not resurrected)
-    assert final[2] == (2, None)
-
-
 def test_compacted_aggregate_resolves_toast_across_batches(spark, toast_cdc_dir, tmp_path):
     path, big = toast_cdc_dir
     flat = _toast_flat(spark, path)
@@ -934,7 +848,7 @@ def test_incremental_dedup_foreign_commit_log_never_folds_running_batch(spark, t
 
 
 def test_merge_latest_matches_pure_python_fold():
-    """Cross-implementation pin for the stateful backends' kernel:
+    """Cross-implementation pin for the pandas reference fold:
     seeded random per-key histories (restored-state seeds, markers,
     real NULLs, deletes, seq ties where the LATER batch row must win
     under the stable sort) merged by `merge_latest` must equal an
