@@ -33,7 +33,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL per query (omitted for genuinely
-    non-SQL-expressible ops: xxhash64-based LSH signatures, pandas
-    decode plumbing — the driver records rows-only checks for those)."""
+    """DuckDB-runnable oracle SQL per query (omitted where the result
+    depends on a sampled k-means fit or a greedy merge loop — the
+    driver records rows-only checks for those). Every MinHash, SimHash
+    and sign-LSH signature uses ``md5_long``, which DuckDB reproduces;
+    xxhash64 appears only as shingle join keys, salts and bucketing."""
     return dict(ORACLES)

@@ -209,44 +209,6 @@ EXTENDED_QUERIES = [
 ]
 
 
-def _prod_minhash(spark, sf_dir):
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.io import load_table
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import minhash_candidate_pairs
-
-    return minhash_candidate_pairs(load_table(spark, sf_dir, "documents"), min_est_jaccard=0.3)
-
-
-def _prod_simhash(spark, sf_dir):
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.io import load_table
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(load_table(spark, sf_dir, "documents"), max_hamming=7, blocks=8, n=3)
-
-
-def _prod_lsh(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.io import load_table
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.similarity import lsh_bucketed_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_bucketed_topk(emb, emb.filter(F.col("vec_id") % 100 == 0), k=10, bits=4)
-
-
-#: round 3 moved the REGISTERED minhash/simhash/sign-LSH queries onto
-#: the md5-prefix hash family so DuckDB can value-hash grade them; md5
-#: costs ~5× xxhash64 (string render + digest + hex parse vs one
-#: codegen'd call). The headline ratchet keeps measuring the
-#: PRODUCTION xxhash64 family — the same operator the r1/r2 numbers
-#: measured — so round-over-round comparisons stay apples-to-apples.
-#: Same plan shape either way; only the hash expression differs.
-BENCH_OVERRIDES = {
-    "dedup_minhash": _prod_minhash,
-    "dedup_simhash": _prod_simhash,
-    "similarity_topk_lsh": _prod_lsh,
-}
-
-
 def run_one(spark, name: str, sf_dir: str) -> float:
     """One UNTIMED warm pass, then min of two timed executions.
 
@@ -257,8 +219,10 @@ def run_one(spark, name: str, sf_dir: str) -> float:
     discards the multi-second CPU-steal bursts this host injects
     (measured round 3: same query, same code, 1.9 s vs 42.9 s across
     two clean runs); the JSON records the aggregation so rounds are
-    compared knowingly (r1/r2 single-run, r3 cold min-of-2)."""
-    build = BENCH_OVERRIDES.get(name, QUERIES[name])
+    compared knowingly (r1/r2 single-run, r3 cold min-of-2). Every
+    query is timed through its registered builder, the one its oracle
+    grades."""
+    build = QUERIES[name]
     build(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
     times = []
     for _ in range(2):

@@ -2,11 +2,12 @@
 Jaccard.
 
 Scale design: every signature is computed as a pure column expression
-(higher-order functions + the JVM-side ``xxhash64``) — a narrow map
-over the scan with NO Python and NO shuffle. The only shuffles are the
-ones the algorithms fundamentally need: one hash aggregation for exact
-dedup, one (band-key) self-join for LSH candidate generation, one
-(shingle-key) self-join for exact Jaccard. At 100 TB the band/shingle
+(codegen'd aggregations over :func:`md5_long` hashes) — a narrow map
+over the scan with NO Python. The only shuffles are the ones the
+algorithms fundamentally need: one per-document aggregation for each
+signature, one hash aggregation for exact dedup, one (band-key)
+self-join for LSH candidate generation, one (shingle-key) self-join
+for exact Jaccard. At 100 TB the band/shingle
 joins are the standard scalable formulation (bucket keys distribute;
 hot shingles can be frequency-capped).
 """
@@ -34,26 +35,12 @@ def md5_long(col: Column) -> Column:
 
     Cross-engine reproducible — DuckDB computes the identical value as
     ``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`` — which makes
-    whole signature pipelines oracle-gradeable end to end. xxhash64
-    remains the PRODUCTION hash family (one codegen'd call on native
-    bytes vs md5's string render + digest + hex parse, ~5× cheaper);
-    the ``hash_family="md5"`` paths below exist so the driver can
-    value-hash-grade the same pipeline shape, not as the scale path."""
+    whole signature pipelines oracle-gradeable end to end. It is the
+    one hash of every MinHash, SimHash and sign-LSH signature, so the
+    path that is timed is the path that is graded. Hashes that never
+    reach a result (shingle join keys, salts, bucketing) keep the
+    cheaper one-call native-bytes hash."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct n-gram token shingles of a text column (array<string>).
-
-    Readable per-row form (higher-order functions are interpreted —
-    fine for inspection/small data). The bulk dedup operators use
-    ``shingle_hashes`` instead, which is fully codegen'd."""
-    toks = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    gram = lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)])  # noqa: E731
-    grams = F.array_distinct(F.transform(idx, gram))
-    # sequence(1, 0) would generate a DESCENDING range: guard short docs
-    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
 def shingle_hashes(
@@ -66,8 +53,13 @@ def shingle_hashes(
 ) -> DataFrame:
     """Distinct n-gram shingle hashes per document: ``(_id, _sh)``
     with ``_sh = xxhash64(tok_i, …, tok_{i+n-1})`` (or, with
-    ``hash_family="md5"``, :func:`md5_long` of the space-joined gram —
-    the oracle-gradeable family).
+    ``hash_family="md5"``, :func:`md5_long` of the space-joined gram).
+
+    ``hash_family`` picks by what ``_sh`` is used for: ``"md5"`` where
+    it reaches a result (MinHash/SimHash input, hashed features), so
+    DuckDB can reproduce it; ``"xx"`` where it is only a join or group
+    key (exact Jaccard, containment, spans, contamination), where the
+    cheaper hash changes no result.
 
     A tuple ``n`` (e.g. ``(1, 2)``) emits the grams of every listed
     order from the same token pass and window: the union of the
@@ -75,11 +67,12 @@ def shingle_hashes(
 
     Hot-path formulation: posexplode tokens → per-document window
     ``lead`` → one multi-column hash — everything whole-stage
-    codegen'd (the higher-order `shingles` expression is interpreted
-    and ~10× slower). The window shuffle partitions by document id,
-    which is exactly how shingle work distributes at 100 TB. Shingle
-    identity is an 8-byte hash (collision odds ~2⁻⁶⁴), so downstream
-    joins/aggregations shuffle longs, never strings."""
+    codegen'd (a per-row higher-order ``transform`` over the token
+    array is interpreted and ~10× slower). The window shuffle
+    partitions by document id, which is exactly how shingle work
+    distributes at 100 TB. Shingle identity is an 8-byte hash
+    (collision odds ~2⁻⁶⁴), so downstream joins/aggregations shuffle
+    longs, never strings."""
     from pyspark.sql.window import Window
 
     # the _id window shuffle immediately redistributes the exploded
@@ -113,91 +106,66 @@ def shingle_hashes(
     return sh.dropDuplicates(["_id", "_sh"]) if distinct else sh
 
 
-def minhash_signature(text_col: Column, num_hashes: int = 32, n: int = 3) -> Column:
-    """MinHash signature (array<bigint>) as a single column expression.
-
-    NOTE: higher-order functions are interpreted, not codegen'd — this
-    per-row form is O(num_hashes × shingles) interpreted evals. For
-    bulk signatures prefer ``minhash_signatures`` (explode + codegen'd
-    min aggregations), which is ~10× faster and shuffles only one
-    compacted row per document thanks to map-side partial aggregation."""
-    sh = shingles(text_col, n)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda k: F.coalesce(
-            F.array_min(F.transform(sh, lambda s: F.xxhash64(s, k))),
-            F.lit(9223372036854775807),
-        ),
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 32,
     n: int = 3,
-    hash_family: str = "xx",
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Bulk MinHash signatures over hashed shingles: ``num_hashes``
-    codegen'd ``min(h_k(shingle_hash))`` aggregations (h_k = xxhash64
-    seeded by k, or the md5-derived family for oracle grading). Partial
-    aggregation reduces shingles map-side, so the agg shuffle carries
-    one row per document. Output: ``_id``, ``_sig`` (array<bigint>).
+    codegen'd ``min(h_k(shingle_hash))`` aggregations (h_k =
+    :func:`md5_long` of ``'k:shingle_hash'``). Partial aggregation
+    reduces shingles map-side, so the agg shuffle carries one row per
+    document. Output: ``_id``, ``_sig`` (array<bigint>).
 
     ``shingles_df``: a precomputed ``(_id, _sh)`` table (the
-    `shingle_hashes` shape, SAME hash family) to reuse instead of
+    `shingle_hashes` shape, ``hash_family="md5"``) to reuse instead of
     re-shingling — at scale the shingle pass is the expensive half,
     and callers that also need exact-Jaccard ground truth (the recall
     curve) or several signature widths should materialize it once."""
     sh = (
         shingles_df
         if shingles_df is not None
-        else shingle_hashes(df, text_col, id_col, n, hash_family=hash_family)
+        else shingle_hashes(df, text_col, id_col, n, hash_family="md5")
     )
-    # Both families render their num_hashes-wide aggregate lists as SQL
-    # TEXT parsed JVM-side in a handful of calls: the equivalent
-    # Column-API loops cost ~450 py4j round trips ≈ 1-3 s of DRIVER
+    # The num_hashes-wide aggregate list is rendered as SQL TEXT parsed
+    # JVM-side in a handful of calls: the equivalent Column-API loops cost ~450 py4j round trips ≈ 1-3 s of DRIVER
     # time per plan build (measured at 32 hashes: 1.0-3.4 s API vs
     # 0.26-0.68 s text — the same plan-build trap the SimHash and
     # IVF/PQ literal renderings avoid; the bench pays the build on
     # every timed run).
-    if hash_family == "md5":
-        # min() over the 15-char HEX PREFIX, hex→long conversion AFTER
-        # the aggregation: md5() renders fixed-width lowercase hex, so
-        # the lexicographic (binary UTF8) min of the prefix IS the
-        # numeric min of `md5_long`'s value — and `conv` (the dominant
-        # cost of the chain, ~3× the md5 digest itself: measured 4.8 s
-        # vs 1.2 s for 32 projections over 326k rows at sf0.1) then
-        # runs once per (doc, k) group instead of once per (shingle
-        # row, k). Same values, ~25-30% less signature-stage wall.
-        aggs = [
-            F.expr(
-                f"min(substring(md5(concat_ws(':', '{k}', cast(_sh as string))), 1, 15)) AS _m{k}"
-            )
-            for k in range(num_hashes)
-        ]
-        conv_list = ", ".join(
-            f"cast(conv(_m{k}, 16, 10) as bigint)" for k in range(num_hashes)
+    # min() over the 15-char HEX PREFIX, hex→long conversion AFTER
+    # the aggregation: md5() renders fixed-width lowercase hex, so
+    # the lexicographic (binary UTF8) min of the prefix IS the
+    # numeric min of `md5_long`'s value — and `conv` (the dominant
+    # cost of the chain, ~3× the md5 digest itself: measured 4.8 s
+    # vs 1.2 s for 32 projections over 326k rows at sf0.1) then
+    # runs once per (doc, k) group instead of once per (shingle
+    # row, k). Same values, ~25-30% less signature-stage wall.
+    aggs = [
+        F.expr(
+            f"min(substring(md5(concat_ws(':', '{k}', cast(_sh as string))), 1, 15)) AS _m{k}"
         )
-        return sh.groupBy("_id").agg(*aggs).selectExpr("_id", f"array({conv_list}) AS _sig")
-    aggs = [F.expr(f"min(xxhash64(_sh, {k})) AS _h{k}") for k in range(num_hashes)]
-    arr_list = ", ".join(f"_h{k}" for k in range(num_hashes))
-    return sh.groupBy("_id").agg(*aggs).selectExpr("_id", f"array({arr_list}) AS _sig")
+        for k in range(num_hashes)
+    ]
+    conv_list = ", ".join(
+        f"cast(conv(_m{k}, 16, 10) as bigint)" for k in range(num_hashes)
+    )
+    return sh.groupBy("_id").agg(*aggs).selectExpr("_id", f"array({conv_list}) AS _sig")
 
 
-def minhash_bands(sig_col: Column, bands: int, rows: int, hash_family: str = "xx") -> Column:
-    """LSH band keys: hash each contiguous ``rows``-slice of the
-    signature → array<bigint> of ``bands`` bucket keys."""
-    if hash_family == "md5":
-        def band_key(b):
-            return md5_long(
-                F.concat_ws(":", b.cast("string"), F.concat_ws(",", F.slice(sig_col, b * rows + 1, rows)))
-            )
-    else:
-        def band_key(b):
-            return F.xxhash64(F.concat_ws(",", F.slice(sig_col, b * rows + 1, rows)), b)
+def minhash_bands(sig_col: Column, bands: int, rows: int) -> Column:
+    """LSH band keys: :func:`md5_long` of ``'b:'`` + each contiguous
+    ``rows``-slice of the signature → array<bigint> of ``bands``
+    bucket keys."""
+
+    def band_key(b):
+        return md5_long(
+            F.concat_ws(":", b.cast("string"), F.concat_ws(",", F.slice(sig_col, b * rows + 1, rows)))
+        )
+
     return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
 
 
@@ -208,7 +176,6 @@ def minhash_candidate_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     min_est_jaccard: float = 0.5,
-    hash_family: str = "xx",
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs.
@@ -223,9 +190,9 @@ def minhash_candidate_pairs(
     # sides of the pair join); localCheckpoint materializes it once
     # instead of recomputing the explode+agg lineage per consumer
     sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, hash_family=hash_family, shingles_df=shingles_df
+        df, text_col, id_col, num_hashes, shingles_df=shingles_df
     ).localCheckpoint(eager=False)
-    pairs = minhash_band_pairs(sig, bands, rows, hash_family=hash_family)
+    pairs = minhash_band_pairs(sig, bands, rows)
     sig_a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
     sig_b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
     agree = F.size(
@@ -243,9 +210,7 @@ def minhash_candidate_pairs(
     )
 
 
-def minhash_band_pairs(
-    sig: DataFrame, bands: int, rows: int, hash_family: str = "xx"
-) -> DataFrame:
+def minhash_band_pairs(sig: DataFrame, bands: int, rows: int) -> DataFrame:
     """Candidate pairs from an LSH band self-join over a signature
     table ``(_id, _sig)`` — the band-explode + equi-join +
     pair-dedup core of :func:`minhash_candidate_pairs`, exposed so
@@ -255,9 +220,7 @@ def minhash_band_pairs(
     discarding it. Output: id_a, id_b (id_a < id_b, deduped)."""
     banded = sig.select(
         "_id",
-        F.posexplode(minhash_bands(F.col("_sig"), bands, rows, hash_family=hash_family)).alias(
-            "_band", "_bh"
-        ),
+        F.posexplode(minhash_bands(F.col("_sig"), bands, rows)).alias("_band", "_bh"),
     )
     left = banded.select(F.col("_id").alias("id_a"), "_band", "_bh")
     right = banded.select(F.col("_id").alias("id_b"), "_band", "_bh")
@@ -274,10 +237,9 @@ def simhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 1,
-    hash_family: str = "xx",
 ) -> DataFrame:
     """Bulk 64-bit SimHash signatures over token n-grams.
-    (With ``hash_family="md5"`` features carry 60 effective bits —
+    (Features are :func:`md5_long` hashes with 60 effective bits —
     the md5-prefix hash is 15 hex chars — so signature bits 60-63 are
     structurally 0 on both engines; hamming semantics are unaffected.)
 
@@ -287,13 +249,12 @@ def simhash_signatures(
     vector is reassembled into a single bigint. Output: ``_id``,
     ``_sig``."""
     if n > 1:
-        feats = shingle_hashes(df, text_col, id_col, n, hash_family=hash_family)
+        feats = shingle_hashes(df, text_col, id_col, n, hash_family="md5")
     else:
-        tok_hash = md5_long(F.col("_tok")) if hash_family == "md5" else F.xxhash64("_tok")
         feats = df.select(
             F.col(id_col).alias("_id"),
             F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("_tok"),
-        ).select("_id", tok_hash.alias("_sh"))
+        ).select("_id", md5_long(F.col("_tok")).alias("_sh"))
     # Lane-packed bit counting: two 32-bit counters per long (bit 2g in
     # the low lane, bit 2g+1 in the high lane) ⇒ 32 sum columns + one
     # count instead of 64 sums. Halves the agg buffer and the generated
@@ -341,7 +302,6 @@ def simhash_near_pairs(
     max_hamming: int = 7,
     blocks: int = 8,
     n: int = 3,
-    hash_family: str = "xx",
 ) -> DataFrame:
     """SimHash near-dup pairs with block-key LSH: split the 64-bit
     signature into ``blocks`` bands; candidate pairs agree on at least
@@ -352,9 +312,7 @@ def simhash_near_pairs(
     # barrier: the signature subplan (explode + 64-way sum agg) feeds
     # BOTH sides of the self-join — materialize it once, as in
     # minhash_candidate_pairs
-    sig = simhash_signatures(
-        df, text_col, id_col, n=n, hash_family=hash_family
-    ).localCheckpoint(eager=False)
+    sig = simhash_signatures(df, text_col, id_col, n=n).localCheckpoint(eager=False)
     banded = sig.select(
         "_id",
         "_sig",
@@ -644,7 +602,6 @@ def duplicated_span_stats(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_family: str = "xx",
 ) -> DataFrame:
     """Span-level exact-duplication audit (the ExactSubstr criterion of
     Lee et al., "Deduplicating Training Data Makes Language Models
@@ -663,7 +620,7 @@ def duplicated_span_stats(
 
     Output: doc_id, n_spans, n_dup_spans, dup_ratio (round 6).
     """
-    pos = shingle_hashes(df, text_col, id_col, n, distinct=False, hash_family=hash_family)
+    pos = shingle_hashes(df, text_col, id_col, n, distinct=False)
     n_spans = pos.groupBy("_id").agg(F.count(F.lit(1)).alias("n_spans"))
     dup_grams = (
         pos.groupBy("_sh")
@@ -760,7 +717,6 @@ def containment_pairs(
     n: int = 3,
     min_containment: float = 0.6,
     max_shingle_df: int | None = None,
-    hash_family: str = "xx",
 ) -> DataFrame:
     """EXACT n-gram set CONTAINMENT pairs: for an ordered pair (a, b),
     ``containment = |Sa ∩ Sb| / |Sa|`` — the asymmetric cousin of
@@ -774,9 +730,7 @@ def containment_pairs(
     self-join on 8-byte hashes computes each unordered intersection
     once; the two directed rows are projected from that single count.
     ``max_shingle_df`` bounds hot-shingle pair blow-up identically."""
-    sh = shingle_hashes(df, text_col, id_col, n, hash_family=hash_family).localCheckpoint(
-        eager=False
-    )
+    sh = shingle_hashes(df, text_col, id_col, n).localCheckpoint(eager=False)
     if max_shingle_df is not None:
         sh = drop_hot_shingles(sh, max_shingle_df)
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -834,8 +788,8 @@ def remove_boilerplate_segments(
     boilerplate set is then BROADCAST back as a flag join (by
     construction it holds only segments with df ≥ min_docs, orders of
     magnitude smaller than the corpus; for adversarial corpora where
-    it is still large, hash segments with xxhash64 first and let the
-    join shuffle on 8-byte keys); totals, kept-counts AND in-order
+    it is still large, hash segments to 8-byte keys first and let the
+    join shuffle on those); totals, kept-counts AND in-order
     reassembly then come out of ONE doc-keyed hash aggregation over
     the flagged segments (conditional aggregates — `collect_list`
     skips the null structs of boilerplate rows), so the corpus is

@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
+from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import md5_long
 from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.scale import spread_scan
 
 
@@ -136,13 +137,12 @@ def cosine_topk(
     ).filter(F.col("rank") <= k)
 
 
-def sign_lsh_signature(vec: str, bits: int = 8, hash_family: str = "xx") -> Column:
+def sign_lsh_signature(vec: str, bits: int = 8) -> Column:
     """Random-hyperplane LSH bucket id (long): bit b = sign(v · w_b),
     w_b a deterministic pseudo-random hyperplane with per-(dim, bit)
-    weights in [-1, 1) derived from a hash: pmod(h(i, b), 2000)/1000-1.
-    The "md5" family derives h from the md5-prefix hash (identically
-    computable in DuckDB) so bucketing is oracle-gradeable; xxhash64
-    stays the production family (~5x cheaper, no string render).
+    weights in [-1, 1) derived from a hash: pmod(h(i, b), 2000)/1000-1,
+    with h the md5-prefix hash of ``'b,i'`` (:func:`..dedup.md5_long`,
+    identically computable in DuckDB) so bucketing is oracle-gradeable.
 
     ``vec`` is the vector COLUMN NAME: the whole signature is rendered
     as SQL TEXT and parsed JVM-side in one call. The equivalent
@@ -156,17 +156,11 @@ def sign_lsh_signature(vec: str, bits: int = 8, hash_family: str = "xx") -> Colu
         )
     terms = []
     for b in range(bits):
-        if hash_family == "md5":
-            w = (
-                f"(CAST(pmod(CAST(conv(substring(md5(concat_ws(',', '{b}', "
-                "CAST(i AS STRING))), 1, 15), 16, 10) AS BIGINT), 2000) AS DOUBLE)"
-                " - CAST(1000.0 AS DOUBLE)) / CAST(1000.0 AS DOUBLE)"
-            )
-        else:
-            w = (
-                f"(CAST(pmod(xxhash64(i, {b}), 2000) AS DOUBLE)"
-                " - CAST(1000.0 AS DOUBLE)) / CAST(1000.0 AS DOUBLE)"
-            )
+        w = (
+            f"(CAST(pmod(CAST(conv(substring(md5(concat_ws(',', '{b}', "
+            "CAST(i AS STRING))), 1, 15), 16, 10) AS BIGINT), 2000) AS DOUBLE)"
+            " - CAST(1000.0 AS DOUBLE)) / CAST(1000.0 AS DOUBLE)"
+        )
         proj = (
             f"aggregate(zip_with(`{vec}`, sequence(0, size(`{vec}`) - 1), "
             f"(x, i) -> CAST(x AS DOUBLE) * {w}), "
@@ -187,7 +181,6 @@ def lsh_bucketed_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "qid",
-    hash_family: str = "xx",
 ) -> DataFrame:
     """Approximate top-k: candidates limited to the query's LSH bucket
     (equi-join on bucket id — shuffles scale with bucket sizes, not
@@ -197,13 +190,13 @@ def lsh_bucketed_topk(
         F.col(id_col),
         F.col(vec_col),
         F.sqrt(sq_norm(F.col(vec_col))).alias("_cn"),
-        sign_lsh_signature(vec_col, bits, hash_family).alias("_bucket"),
+        sign_lsh_signature(vec_col, bits).alias("_bucket"),
     )
     q = queries.select(
         F.col(id_col).alias(query_id_col),
         F.col(vec_col).alias("_qvec"),
         F.sqrt(sq_norm(F.col(vec_col))).alias("_qn"),
-        sign_lsh_signature(vec_col, bits, hash_family).alias("_bucket"),
+        sign_lsh_signature(vec_col, bits).alias("_bucket"),
     )
     scored = (
         c.join(q, "_bucket")
@@ -233,7 +226,6 @@ def ivf_topk(
     query_id_col: str = "qid",
     seed: int = 42,
     quantizer: str = "kmeans",
-    hash_family: str = "xx",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: partition the corpus
     into ``nlist`` cells, probe the ``nprobe`` nearest cells per
@@ -249,22 +241,18 @@ def ivf_topk(
     ``quantizer``: ``"kmeans"`` (production default — bounded sampled
     fit, L2 cell assignment) or ``"sample"`` — a fully deterministic
     inner-product IVF: centroids are the ``nlist`` corpus vectors
-    with the smallest hash of their id, and BOTH corpus assignment
-    and query probing take the max-dot cell (MIPS-style IVF). The
-    sample quantizer trades cell quality for engine-independent
-    reproducibility, which is what lets the registry value-hash grade
-    the whole assign→probe→rank pipeline against DuckDB; dots are
+    with the smallest :func:`..dedup.md5_long` of their id, and BOTH
+    corpus assignment and query probing take the max-dot cell
+    (MIPS-style IVF). The sample quantizer trades cell quality for
+    engine-independent reproducibility, which is what lets the
+    registry value-hash grade the whole assign→probe→rank pipeline
+    against DuckDB; dots are
     rounded to 6 digits before ranking so cell choice can't flip on
     summation-order ulps.
     """
     spark = corpus.sparkSession
     if quantizer == "sample":
-        if hash_family == "md5":
-            from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import md5_long
-
-            hf = md5_long(F.col(id_col).cast("string"))
-        else:
-            hf = F.xxhash64(F.col(id_col))
+        hf = md5_long(F.col(id_col).cast("string"))
         cent_rows = corpus.select(F.col(id_col), F.col(vec_col), hf.alias("_h")).orderBy(
             "_h", id_col
         ).limit(nlist)
@@ -411,17 +399,14 @@ def embedding_near_dup_pairs(
     bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_family: str = "xx",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH bucketing (near
-    duplicates almost surely share the bucket). Output: id_a, id_b, sim.
-    ``hash_family="md5"`` swaps the hyperplane weights onto the
-    md5-prefix hash (DuckDB-computable) for oracle grading."""
+    duplicates almost surely share the bucket). Output: id_a, id_b, sim."""
     sig = spread_scan(df).select(
         F.col(id_col),
         F.col(vec_col),
         F.sqrt(sq_norm(F.col(vec_col))).alias("_n"),
-        sign_lsh_signature(vec_col, bits, hash_family).alias("_bucket"),
+        sign_lsh_signature(vec_col, bits).alias("_bucket"),
     )
     a = sig.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), F.col("_n").alias("_na"), F.col("_bucket")
@@ -454,7 +439,6 @@ def pq_topk(
     query_id_col: str = "qid",
     seed: int = 42,
     quantizer: str = "kmeans",
-    hash_family: str = "xx",
     rerank: int = 0,
 ) -> DataFrame:
     """Product-quantization (PQ) approximate top-k with asymmetric
@@ -480,9 +464,9 @@ def pq_topk(
     ``quantizer``: ``"kmeans"`` (production default — per-subspace
     sampled KMeans fits, cost O(m·ks·dim) flat in corpus size) or
     ``"sample"`` — codewords are the subvectors of the ``ks`` corpus
-    vectors with the smallest id-hash, fully deterministic and
-    engine-independent, which lets the registry value-hash the whole
-    encode→ADC→rank pipeline against DuckDB (``hash_family="md5"``).
+    vectors with the smallest :func:`..dedup.md5_long` of their id,
+    fully deterministic and engine-independent, which lets the registry
+    value-hash the whole encode→ADC→rank pipeline against DuckDB.
     Distances and ADC entries are rounded to 6 digits before
     argmin/sum so code assignment cannot flip on summation-order ulps.
     """
@@ -497,12 +481,7 @@ def pq_topk(
 
     # ---- codebooks[s][c] = subvector (python floats; m·ks·sub values)
     if quantizer == "sample":
-        if hash_family == "md5":
-            from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import md5_long
-
-            hf = md5_long(F.col(id_col).cast("string"))
-        else:
-            hf = F.xxhash64(F.col(id_col))
+        hf = md5_long(F.col(id_col).cast("string"))
         rows = (
             corpus.select(F.col(vec_col), hf.alias("_h"), F.col(id_col))
             .orderBy("_h", id_col)

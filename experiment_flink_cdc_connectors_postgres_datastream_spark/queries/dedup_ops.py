@@ -1,10 +1,11 @@
 """Deduplication queries (§7.4 extensions) over `documents`.
 
-All families carry full value-hash SQL oracles. MinHash/SimHash are
-graded on the md5-prefix hash family (`operators.dedup.md5_long`),
+All families carry full value-hash SQL oracles. MinHash/SimHash
+signatures use the md5-prefix hash (`operators.dedup.md5_long`),
 which DuckDB reproduces exactly via
-``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``; the operators'
-production default remains xxhash64 (cheaper, pytest-covered).
+``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``; exact-Jaccard,
+span and containment shingles are xxhash64 join keys, graded through
+counts that no hash value reaches.
 """
 
 from __future__ import annotations
@@ -114,13 +115,10 @@ _MINHASH_PAIRS_ORACLE = f"""
 
 @register("dedup_minhash", _MINHASH_PAIRS_ORACLE)
 def dedup_minhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidate pairs (est. Jaccard ≥ 0.3), on
-    the md5-derived hash family so the full signature→band→pair
-    pipeline is value-hash graded against DuckDB; the production
-    default stays xxhash64 (pytest-covered near-dup recall)."""
-    return minhash_candidate_pairs(
-        load_table(spark, sf_dir, "documents"), min_est_jaccard=0.3, hash_family="md5"
-    )
+    """MinHash+LSH near-dup candidate pairs (est. Jaccard ≥ 0.3); the
+    md5-derived signatures make the full signature→band→pair pipeline
+    value-hash graded against DuckDB."""
+    return minhash_candidate_pairs(load_table(spark, sf_dir, "documents"), min_est_jaccard=0.3)
 
 
 @register(
@@ -149,12 +147,10 @@ def dedup_minhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash (3-gram features) near-dup pairs within hamming radius 7
-    (8-band LSH, exhaustive at that radius by pigeonhole), on the
-    md5-derived feature family (60 effective bits) so signatures and
-    pairs are value-hash graded; production default stays xxhash64."""
-    return simhash_near_pairs(
-        load_table(spark, sf_dir, "documents"), max_hamming=7, blocks=8, n=3, hash_family="md5"
-    )
+    (8-band LSH, exhaustive at that radius by pigeonhole); the
+    md5-derived features (60 effective bits) make signatures and pairs
+    value-hash graded."""
+    return simhash_near_pairs(load_table(spark, sf_dir, "documents"), max_hamming=7, blocks=8, n=3)
 
 
 #: df-capped (≤ 1000) like `dedup_ngram_jaccard`: every consumer of
@@ -312,8 +308,9 @@ def dedup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level exact-duplication audit (ExactSubstr at 5-gram
     granularity, Lee et al. arXiv:2107.06499): per document, how many
     n-gram positions are covered by a gram found in ≥2 distinct docs.
-    The per-doc counts are hash-family-independent, so the production
-    xxhash64 path is graded directly against a gram-string oracle."""
+    The gram hashes are only join keys and the per-doc counts do not
+    depend on them, so the xxhash64 grams are graded directly against a
+    gram-string oracle."""
     from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import duplicated_span_stats
 
     return duplicated_span_stats(load_table(spark, sf_dir, "documents"), n=5, min_docs=2)
@@ -405,9 +402,7 @@ def _calibration_candidates(
     is garbage-collected — same single-execution guarantee, no
     session-lifetime pin."""
     limit = CALIBRATION_PERSIST_THRESHOLD_BYTES if threshold is None else threshold
-    cands = minhash_candidate_pairs(
-        docs, min_est_jaccard=0.3, hash_family="md5", shingles_df=shingles_df
-    )
+    cands = minhash_candidate_pairs(docs, min_est_jaccard=0.3, shingles_df=shingles_df)
     est_bytes = int(
         docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
@@ -559,7 +554,7 @@ def dup_rate_by_source_pair_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels join by doc id (broadcast-eligible dimension access); the
     matrix itself is |sources|²-bounded."""
     docs = load_table(spark, sf_dir, "documents")
-    cands = minhash_candidate_pairs(docs, min_est_jaccard=0.3, hash_family="md5")
+    cands = minhash_candidate_pairs(docs, min_est_jaccard=0.3)
     src = docs.select("doc_id", "source")
     lab = (
         cands.join(src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("_sa")), "id_a")
@@ -854,10 +849,9 @@ def minhash_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bound as `ngram_jaccard_pairs(max_shingle_df=...)`, mirrored
     in the oracle's `shc` CTE; never all-pairs — pairs sharing no
     retained shingle have Jaccard ~0 and belong to no band).
-    Candidates come from the same UNCAPPED md5-family signature
-    pipeline the graded `dedup_minhash` runs — the production path
-    being measured. Exact int/int recall — deterministic across
-    engines."""
+    Candidates come from the same UNCAPPED signature pipeline the
+    graded `dedup_minhash` runs. Exact int/int recall — deterministic
+    across engines."""
     from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import shingle_hashes
 
     from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import drop_hot_shingles
@@ -899,8 +893,8 @@ def minhash_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
 
-    sig = minhash_signatures(aug, hash_family="md5", shingles_df=sh)
-    cands = minhash_band_pairs(sig, bands=8, rows=4, hash_family="md5").select(
+    sig = minhash_signatures(aug, shingles_df=sh)
+    cands = minhash_band_pairs(sig, bands=8, rows=4).select(
         "id_a", "id_b", F.lit(1).alias("caught")
     )
     j_band = (
@@ -1231,8 +1225,9 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the decontamination family: `contamination_check`
     (exact overlap per eval doc), `decontaminate_fuzzy` (removal list
     by containment), and this (token-precise strip statistics).
-    Counts are hash-family-independent, so the production xxhash64
-    grams are graded directly against the string-gram oracle.
+    The gram hashes are only join keys and the counts do not depend on
+    them, so the xxhash64 grams are graded directly against the
+    string-gram oracle.
 
     Scale shape: positioned 5-grams reduce to 8-byte hashes; the eval
     gram set is DISTINCT and tiny (eval corpora are small by nature),

@@ -1,10 +1,9 @@
 """Similarity-search queries (§7.4 extensions) over `embeddings`.
 
 The brute-force cosine top-k has a full SQL oracle (DuckDB zipped
-unnest → dot product in double). The graded LSH variant derives its
-hyperplanes from the md5-prefix hash so bucketing is oracle-exact too
-(production default stays xxhash64); IVF depends on a k-means fit →
-rows-only oracle by contract.
+unnest → dot product in double). The LSH variants derive their
+hyperplanes from the md5-prefix hash so bucketing is oracle-exact too;
+IVF depends on a k-means fit → rows-only oracle by contract.
 """
 
 from __future__ import annotations
@@ -125,13 +124,12 @@ def embedding_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_topk_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via sign-LSH bucketing (scale path), with
-    md5-derived hyperplane weights so bucket assignment and within-
-    bucket ranking are value-hash graded against DuckDB; production
-    default stays xxhash64 hyperplanes."""
+    """Approximate top-10 via sign-LSH bucketing (scale path); the
+    md5-derived hyperplane weights make bucket assignment and within-
+    bucket ranking value-hash graded against DuckDB."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return lsh_bucketed_topk(emb, queries, k=10, bits=4, hash_family="md5")
+    return lsh_bucketed_topk(emb, queries, k=10, bits=4)
 
 
 @register("similarity_topk_ivf")  # kmeans cells → rows-only oracle
@@ -180,12 +178,9 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (LSH-bucketed candidates;
     threshold 0.45 sits at the ~99.99th percentile of the synthetic
     corpus' pairwise cosine, so the detector returns a small real
-    set). Graded on the md5-prefix hyperplane family so bucket
-    assignment AND the verified cosines hash-match the DuckDB oracle;
-    production default stays xxhash64 hyperplanes."""
-    return embedding_near_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), min_cosine=0.45, bits=4, hash_family="md5"
-    )
+    set). The md5-prefix hyperplanes make bucket assignment AND the
+    verified cosines hash-match the DuckDB oracle."""
+    return embedding_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), min_cosine=0.45, bits=4)
 
 
 @register(
@@ -251,9 +246,7 @@ def similarity_topk_ivf_sampled_q(spark: SparkSession, sf_dir: str) -> DataFrame
     shuffle ∝ |corpus|·nprobe/nlist."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return ivf_topk(
-        emb, queries, k=10, nlist=16, nprobe=4, quantizer="sample", hash_family="md5"
-    )
+    return ivf_topk(emb, queries, k=10, nlist=16, nprobe=4, quantizer="sample")
 
 
 @register("similarity_topk_pq")
@@ -327,7 +320,7 @@ def similarity_topk_pq_sampled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return pq_topk(emb, queries, k=10, m=16, ks=16, quantizer="sample", hash_family="md5")
+    return pq_topk(emb, queries, k=10, m=16, ks=16, quantizer="sample")
 
 
 @register(
@@ -409,9 +402,7 @@ def similarity_topk_pq_sampled_rerank_q(spark: SparkSession, sf_dir: str) -> Dat
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return pq_topk(
-        emb, queries, k=10, m=8, ks=16, quantizer="sample", hash_family="md5", rerank=30
-    )
+    return pq_topk(emb, queries, k=10, m=8, ks=16, quantizer="sample", rerank=30)
 
 
 @register(
@@ -482,7 +473,7 @@ def ann_recall_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     brute = cosine_topk(emb, queries, k=10).select("qid", "vec_id")
-    approx = lsh_bucketed_topk(emb, queries, k=10, bits=4, hash_family="md5").select(
+    approx = lsh_bucketed_topk(emb, queries, k=10, bits=4).select(
         "qid", F.col("vec_id").alias("vec_id"), F.lit(1).alias("_hit")
     )
     joined = brute.join(approx, ["qid", "vec_id"], "left")
@@ -536,7 +527,7 @@ def semantic_dedup_reps_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     sig = emb.select(
         "vec_id",
-        sign_lsh_signature("embedding", bits=8, hash_family="md5").alias("bucket"),
+        sign_lsh_signature("embedding", bits=8).alias("bucket"),
     )
     return sig.groupBy("bucket").agg(
         F.min("vec_id").alias("rep_vec_id"),

@@ -21,25 +21,16 @@ from collections.abc import Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog import compact_latest
 
-try:  # Spark 4 Python DataSource API (same guard as postgres_cdc)
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - pre-4.0 pyspark
-    DataSource = object  # type: ignore[assignment]
-    DataSourceReader = object  # type: ignore[assignment]
-    DataSourceStreamReader = object  # type: ignore[assignment]
-    InputPartition = object  # type: ignore[assignment]
-    _HAS_DATASOURCE_API = False
 
 #: wire metadata ↔ reference DDL mapping (SJCD:162-165):
 #:   timestamp ↔ eventTime METADATA, topic ↔ topic VIRTUAL,
@@ -400,63 +391,55 @@ def _validated_options(options: dict[str, str]) -> dict[str, str]:
     return opts
 
 
-if _HAS_DATASOURCE_API:
+class BusUpsertDataSource(DataSource):
+    """`spark.read[Stream].format("bus_upsert").option("path", spool)`
+    entry point — the S4 `upsert-pulsar` table (SJCD:156-174)
+    through the engine's source API, batch and streaming."""
 
-    class BusUpsertDataSource(DataSource):
-        """`spark.read[Stream].format("bus_upsert").option("path", spool)`
-        entry point — the S4 `upsert-pulsar` table (SJCD:156-174)
-        through the engine's source API, batch and streaming."""
+    @classmethod
+    def name(cls) -> str:
+        return "bus_upsert"
 
-        @classmethod
-        def name(cls) -> str:
-            return "bus_upsert"
+    def schema(self) -> StructType:
+        return BUS_FRAME_SCHEMA
 
-        def schema(self) -> StructType:
-            return BUS_FRAME_SCHEMA
+    def reader(self, schema: StructType) -> BusSpoolBatchReader:
+        return BusSpoolBatchReader(_validated_options(dict(self.options)).get("path", ""))
 
-        def reader(self, schema: StructType) -> BusSpoolBatchReader:
-            return BusSpoolBatchReader(_validated_options(dict(self.options)).get("path", ""))
+    def streamReader(self, schema: StructType) -> BusUpsertStreamReader:
+        opts = _validated_options(dict(self.options))
+        cap = opts.get("maxfilespertrigger")
+        return BusUpsertStreamReader(
+            opts.get("path", ""),
+            max_files_per_trigger=int(cap) if cap is not None else None,
+        )
 
-        def streamReader(self, schema: StructType) -> BusUpsertStreamReader:
-            opts = _validated_options(dict(self.options))
-            cap = opts.get("maxfilespertrigger")
-            return BusUpsertStreamReader(
-                opts.get("path", ""),
-                max_files_per_trigger=int(cap) if cap is not None else None,
-            )
 
-    def register_bus_source(spark) -> None:
-        spark.dataSource.register(BusUpsertDataSource)
+def register_bus_source(spark) -> None:
+    spark.dataSource.register(BusUpsertDataSource)
 
-    def register_bus_table(spark, name: str, path: str) -> None:
-        """SQL-name registration of the spool — the reference's
-        `executeSql("CREATE TABLE … WITH (connector='upsert-pulsar')")`
-        surface (SJCD:156-174): after this, `spark.table(name)` and
-        plain SQL read the topic's frames.
 
-        Implementation note: catalog `CREATE TABLE … USING bus_upsert
-        OPTIONS (path …)` does NOT forward its options to a Python
-        data source in this Spark version (probed: an empty options
-        dict reaches `reader()`, for both OPTIONS and LOCATION), so
-        the name is bound as a session-scoped TEMP VIEW over the
-        batch read — same queryable surface, no silent empty-path
-        table. Temp views take single-part names only, so qualified
-        names are rejected here (not by a later AnalysisException
-        after session state already changed)."""
-        if "." in name:
-            raise ValueError(
-                f"invalid table identifier: {name!r} — the bus table binds as "
-                "a temp view, which takes a single-part name"
-            )
-        if not name.replace("_", "").isalnum():
-            raise ValueError(f"invalid table identifier: {name!r}")
-        register_bus_source(spark)
-        spark.read.format("bus_upsert").option("path", path).load().createOrReplaceTempView(name)
+def register_bus_table(spark, name: str, path: str) -> None:
+    """SQL-name registration of the spool — the reference's
+    `executeSql("CREATE TABLE … WITH (connector='upsert-pulsar')")`
+    surface (SJCD:156-174): after this, `spark.table(name)` and
+    plain SQL read the topic's frames.
 
-else:  # pragma: no cover
-
-    def register_bus_source(spark) -> None:
-        raise ImportError("bus_upsert source requires the Spark 4 Python DataSource API")
-
-    def register_bus_table(spark, name: str, path: str) -> None:
-        raise ImportError("bus_upsert source requires the Spark 4 Python DataSource API")
+    Implementation note: catalog `CREATE TABLE … USING bus_upsert
+    OPTIONS (path …)` does NOT forward its options to a Python
+    data source in this Spark version (probed: an empty options
+    dict reaches `reader()`, for both OPTIONS and LOCATION), so
+    the name is bound as a session-scoped TEMP VIEW over the
+    batch read — same queryable surface, no silent empty-path
+    table. Temp views take single-part names only, so qualified
+    names are rejected here (not by a later AnalysisException
+    after session state already changed)."""
+    if "." in name:
+        raise ValueError(
+            f"invalid table identifier: {name!r} — the bus table binds as "
+            "a temp view, which takes a single-part name"
+        )
+    if not name.replace("_", "").isalnum():
+        raise ValueError(f"invalid table identifier: {name!r}")
+    register_bus_source(spark)
+    spark.read.format("bus_upsert").option("path", path).load().createOrReplaceTempView(name)

@@ -80,15 +80,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
-try:
-    from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    DataSource = object  # type: ignore[assignment]
-    DataSourceStreamReader = object  # type: ignore[assignment]
-    InputPartition = object  # type: ignore[assignment]
-    _HAS_DATASOURCE_API = False
-
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _warned_fallback = False
@@ -181,39 +173,19 @@ class PostgresCDCConfig:
 
     @classmethod
     def from_options(cls, options: dict[str, str]) -> "PostgresCDCConfig":
-        # Spark may or may not lower-case DataSource option keys
-        # depending on entry path; normalize so snapshotChunkSize and
-        # snapshot_chunk_size both land
+        """Parse DataSource options into a config. Each field is read
+        from its snake_case key, else its camelCase key (Spark may or
+        may not lower-case option keys depending on entry path, so
+        ``snapshotChunkSize`` can arrive as ``snapshotchunksize``),
+        coerced by the field's type, and left at the dataclass default
+        when absent — the defaults live only in the dataclass.
+
+        Any unrecognized key fails loudly ('plugn_name' would
+        otherwise silently run with the pgoutput default), except the
+        keys the DataSource read path itself supplies (`path`/`paths`
+        from .load(path)). The known set is derived from the fields
+        (:meth:`known_option_keys`), so it cannot drift from them."""
         options = {k.lower(): v for k, v in options.items()}
-
-        def split(v: str) -> list[str]:
-            return [s.strip() for s in v.split(",") if s.strip()]
-
-        def opt(*names: str, default: str) -> str:
-            for n in names:
-                if n in options:
-                    return options[n]
-            return default
-
-        # every multi-word option accepts both spellings: snake_case
-        # and camelCase (which the lower-casing above folds to one
-        # unbroken word). Before this, a camelCase 'pluginName' (etc.)
-        # normalized to 'pluginname', matched nothing, and was
-        # SILENTLY ignored — with the pgoutput default that would
-        # silently aim a pgoutput reader at a wal2json setup
-        # (ADVICE r11).
-        #
-        # Any OTHER unrecognized key is the same vacuous-
-        # misconfiguration class ('plugn_name' would silently run with
-        # the pgoutput default) and fails loudly instead (ADVICE r12),
-        # excluding keys the DataSource read path itself supplies
-        # (`path`/`paths` from .load(path)) rather than the user's
-        # config. The known set is DERIVED from the dataclass fields
-        # (ADVICE r13): a hand-maintained duplicate would hard-reject
-        # a future config field added without updating it, turning the
-        # loud-failure gate into a false positive. Each field accepts
-        # its snake_case spelling plus the camelCase spelling, which
-        # the lower-casing above folds to the underscore-stripped form.
         known = cls.known_option_keys()
         passthrough = {"path", "paths"}
         unknown = sorted(set(options) - known - passthrough)
@@ -222,39 +194,18 @@ class PostgresCDCConfig:
                 f"postgres_cdc: unrecognized option(s) {unknown}; known options "
                 f"(snake_case or camelCase): {sorted(known)}"
             )
-        return cls(
-            hostname=options.get("hostname", "localhost"),
-            port=int(options.get("port", "5432")),
-            database=options.get("database", "experiment"),
-            username=options.get("username", "postgres"),
-            password=options.get("password", ""),
-            schema_list=split(opt("schema_list", "schemalist", default="public")),
-            table_list=split(opt("table_list", "tablelist", default="")),
-            slot_name=opt("slot_name", "slotname", default=cls.slot_name),
-            plugin_name=opt("plugin_name", "pluginname", default=cls.plugin_name),
-            publication_names=opt(
-                "publication_names", "publicationnames", default=cls.publication_names
-            ),
-            poll_batch_size=int(opt("poll_batch_size", "pollbatchsize", default="1000")),
-            snapshot_chunk_size=int(
-                opt("snapshot_chunk_size", "snapshotchunksize", default="10000")
-            ),
-            snapshot_chunks_per_trigger=int(
-                opt(
-                    "snapshot_chunks_per_trigger",
-                    "snapshotchunkspertrigger",
-                    default="8",
-                )
-            ),
-            wal_rows_per_partition=int(
-                opt("wal_rows_per_partition", "walrowsperpartition", default="8192")
-            ),
-            progress_table=opt(
-                "progress_table",
-                "progresstable",
-                default="public._spark_cdc_snapshot_progress",
-            ),
-        )
+        coerce = {
+            "int": int,
+            "str": str,
+            "list[str]": lambda v: [s.strip() for s in v.split(",") if s.strip()],
+        }
+        values = {}
+        for f in dataclasses.fields(cls):
+            for key in (f.name, f.name.replace("_", "")):
+                if key in options:
+                    values[f.name] = coerce[f.type](options[key])
+                    break
+        return cls(**values)
 
 
 def wal2json_to_envelope(change: dict[str, Any], database: str) -> str | None:
@@ -1196,51 +1147,43 @@ class PostgresCDCStreamReader(DataSourceStreamReader):
                 self._progress_cleared = True
 
 
-if _HAS_DATASOURCE_API:
+class PostgresCDCDataSource(DataSource):
+    """`spark.readStream.format("postgres_cdc")` entry point."""
 
-    class PostgresCDCDataSource(DataSource):
-        """`spark.readStream.format("postgres_cdc")` entry point."""
+    @classmethod
+    def name(cls) -> str:
+        return "postgres_cdc"
 
-        @classmethod
-        def name(cls) -> str:
-            return "postgres_cdc"
+    def schema(self) -> StructType:
+        return RAW_CDC_SCHEMA
 
-        def schema(self) -> StructType:
-            return RAW_CDC_SCHEMA
+    def streamReader(self, schema: StructType) -> PostgresCDCStreamReader:
+        return PostgresCDCStreamReader(PostgresCDCConfig.from_options(dict(self.options)))
 
-        def streamReader(self, schema: StructType) -> PostgresCDCStreamReader:
-            return PostgresCDCStreamReader(PostgresCDCConfig.from_options(dict(self.options)))
 
-    def register(spark) -> None:
-        """Register the source on a session:
-        ``spark.readStream.format("postgres_cdc").options(...)``."""
-        spark.dataSource.register(PostgresCDCDataSource)
+def register(spark) -> None:
+    """Register the source on a session:
+    ``spark.readStream.format("postgres_cdc").options(...)``."""
+    spark.dataSource.register(PostgresCDCDataSource)
 
-    def register_cdc_table(spark, name: str, **options: str) -> None:
-        """Catalog DDL registration — the reference's
-        ``executeSql("CREATE TABLE … WITH (connector=…)")`` surface
-        (StreamingJobWithCustomDeserializer.java:156-174): after this,
-        ``spark.readStream.table(name)`` (or the same from SQL tooling)
-        tails the CDC stream, and the table definition survives in the
-        catalog like any other ``USING``-provider table.
 
-        Identifiers are validated and option values escaped before
-        being rendered into the DDL string."""
-        if not all(part.replace("_", "").isalnum() for part in name.split(".")):
-            raise ValueError(f"invalid table identifier: {name!r}")
-        register(spark)
-        opts = ""
-        if options:
-            rendered = ", ".join(
-                f"{k} '{str(v).replace(chr(39), chr(39) * 2)}'" for k, v in sorted(options.items())
-            )
-            opts = f" OPTIONS ({rendered})"
-        spark.sql(f"CREATE TABLE IF NOT EXISTS {name} USING postgres_cdc{opts}")
+def register_cdc_table(spark, name: str, **options: str) -> None:
+    """Catalog DDL registration — the reference's
+    ``executeSql("CREATE TABLE … WITH (connector=…)")`` surface
+    (StreamingJobWithCustomDeserializer.java:156-174): after this,
+    ``spark.readStream.table(name)`` (or the same from SQL tooling)
+    tails the CDC stream, and the table definition survives in the
+    catalog like any other ``USING``-provider table.
 
-else:  # pragma: no cover
-
-    def register(spark) -> None:
-        raise ImportError("postgres_cdc source requires the Spark 4 Python DataSource API")
-
-    def register_cdc_table(spark, name: str, **options: str) -> None:
-        raise ImportError("postgres_cdc source requires the Spark 4 Python DataSource API")
+    Identifiers are validated and option values escaped before
+    being rendered into the DDL string."""
+    if not all(part.replace("_", "").isalnum() for part in name.split(".")):
+        raise ValueError(f"invalid table identifier: {name!r}")
+    register(spark)
+    opts = ""
+    if options:
+        rendered = ", ".join(
+            f"{k} '{str(v).replace(chr(39), chr(39) * 2)}'" for k, v in sorted(options.items())
+        )
+        opts = f" OPTIONS ({rendered})"
+    spark.sql(f"CREATE TABLE IF NOT EXISTS {name} USING postgres_cdc{opts}")

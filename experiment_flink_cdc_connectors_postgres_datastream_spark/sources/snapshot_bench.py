@@ -20,8 +20,9 @@ import json
 from collections.abc import Iterator
 from typing import Any
 
+from pyspark.sql.datasource import DataSource
+
 from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.postgres_cdc import (
-    _HAS_DATASOURCE_API,
     RAW_CDC_SCHEMA,
     PostgresCDCConfig,
     PostgresCDCStreamReader,
@@ -466,101 +467,92 @@ def _bench_config(opts: dict[str, str]) -> "PostgresCDCConfig":
     )
 
 
-if _HAS_DATASOURCE_API:
-    from pyspark.sql.datasource import DataSource
+class ParquetSnapshotDataSource(DataSource):
+    """``spark.readStream.format("cdc_snapshot_bench")`` — the
+    production chunked-snapshot reader over a parquet-backed
+    client. Options: path (parquet file), table (logical name),
+    pk (comma-separated key columns), plus postgres_cdc's
+    snapshotChunkSize / snapshot_chunks_per_trigger pacing."""
 
-    class ParquetSnapshotDataSource(DataSource):
-        """``spark.readStream.format("cdc_snapshot_bench")`` — the
-        production chunked-snapshot reader over a parquet-backed
-        client. Options: path (parquet file), table (logical name),
-        pk (comma-separated key columns), plus postgres_cdc's
-        snapshotChunkSize / snapshot_chunks_per_trigger pacing."""
+    @classmethod
+    def name(cls) -> str:
+        return "cdc_snapshot_bench"
 
-        @classmethod
-        def name(cls) -> str:
-            return "cdc_snapshot_bench"
+    def schema(self):
+        return RAW_CDC_SCHEMA
 
-        def schema(self):
-            return RAW_CDC_SCHEMA
+    def streamReader(self, schema) -> PostgresCDCStreamReader:
+        opts = {k.lower(): v for k, v in dict(self.options).items()}
+        cfg = _bench_config(opts)
+        client = ParquetSnapshotClient(
+            opts.get("path", ""),
+            opts.get("table", "events"),
+            [c.strip() for c in opts.get("pk", "event_id").split(",") if c.strip()],
+            state_path=_client_opt(opts, "state_path") or None,
+        )
+        return PostgresCDCStreamReader(cfg, client=client)
 
-        def streamReader(self, schema) -> PostgresCDCStreamReader:
-            opts = {k.lower(): v for k, v in dict(self.options).items()}
-            cfg = _bench_config(opts)
-            client = ParquetSnapshotClient(
-                opts.get("path", ""),
-                opts.get("table", "events"),
-                [c.strip() for c in opts.get("pk", "event_id").split(",") if c.strip()],
-                state_path=_client_opt(opts, "state_path") or None,
-            )
-            return PostgresCDCStreamReader(cfg, client=client)
 
-    class ParquetCdcBenchDataSource(DataSource):
-        """``spark.readStream.format("cdc_full_bench")`` — the full
-        snapshot->tail pipeline (production reader, two-phase bench
-        client). Options: path, table, pk, state_path (durable slot +
-        progress — required for restart scenarios), plus the
-        postgres_cdc pacing options (snapshotChunkSize,
-        snapshot_chunks_per_trigger, poll_batch_size)."""
+class ParquetCdcBenchDataSource(DataSource):
+    """``spark.readStream.format("cdc_full_bench")`` — the full
+    snapshot->tail pipeline (production reader, two-phase bench
+    client). Options: path, table, pk, state_path (durable slot +
+    progress — required for restart scenarios), plus the
+    postgres_cdc pacing options (snapshotChunkSize,
+    snapshot_chunks_per_trigger, poll_batch_size)."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "cdc_full_bench"
+    @classmethod
+    def name(cls) -> str:
+        return "cdc_full_bench"
 
-        def schema(self):
-            return RAW_CDC_SCHEMA
+    def schema(self):
+        return RAW_CDC_SCHEMA
 
-        def streamReader(self, schema) -> PostgresCDCStreamReader:
-            opts = {k.lower(): v for k, v in dict(self.options).items()}
-            cfg = _bench_config(opts)
-            client = ParquetCdcBenchClient(
-                opts.get("path", ""),
-                opts.get("table", "events"),
-                [c.strip() for c in opts.get("pk", "event_id").split(",") if c.strip()],
-                state_path=_client_opt(opts, "state_path") or None,
-            )
-            return PostgresCDCStreamReader(cfg, client=client)
+    def streamReader(self, schema) -> PostgresCDCStreamReader:
+        opts = {k.lower(): v for k, v in dict(self.options).items()}
+        cfg = _bench_config(opts)
+        client = ParquetCdcBenchClient(
+            opts.get("path", ""),
+            opts.get("table", "events"),
+            [c.strip() for c in opts.get("pk", "event_id").split(",") if c.strip()],
+            state_path=_client_opt(opts, "state_path") or None,
+        )
+        return PostgresCDCStreamReader(cfg, client=client)
 
-    class ParquetWalDataSource(DataSource):
-        """``spark.readStream.format("cdc_wal_bench")`` — the
-        production WAL-tail reader over the parquet-backed synthetic
-        slot. Options: path (parquet file), table (logical name),
-        state_path (durable slot-state file — set it to survive
-        restarts like a server-side slot), plus postgres_cdc's
-        poll_batch_size (the doubling window's starting width)."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "cdc_wal_bench"
+class ParquetWalDataSource(DataSource):
+    """``spark.readStream.format("cdc_wal_bench")`` — the
+    production WAL-tail reader over the parquet-backed synthetic
+    slot. Options: path (parquet file), table (logical name),
+    state_path (durable slot-state file — set it to survive
+    restarts like a server-side slot), plus postgres_cdc's
+    poll_batch_size (the doubling window's starting width)."""
 
-        def schema(self):
-            return RAW_CDC_SCHEMA
+    @classmethod
+    def name(cls) -> str:
+        return "cdc_wal_bench"
 
-        def streamReader(self, schema) -> PostgresCDCStreamReader:
-            opts = {k.lower(): v for k, v in dict(self.options).items()}
-            cfg = _bench_config(opts)
-            client = ParquetWalClient(
-                opts.get("path", ""),
-                opts.get("table", "events"),
-                state_path=_client_opt(opts, "state_path") or None,
-            )
-            return PostgresCDCStreamReader(cfg, client=client)
+    def schema(self):
+        return RAW_CDC_SCHEMA
 
-    def register_snapshot_bench(spark) -> None:
-        spark.dataSource.register(ParquetSnapshotDataSource)
+    def streamReader(self, schema) -> PostgresCDCStreamReader:
+        opts = {k.lower(): v for k, v in dict(self.options).items()}
+        cfg = _bench_config(opts)
+        client = ParquetWalClient(
+            opts.get("path", ""),
+            opts.get("table", "events"),
+            state_path=_client_opt(opts, "state_path") or None,
+        )
+        return PostgresCDCStreamReader(cfg, client=client)
 
-    def register_wal_bench(spark) -> None:
-        spark.dataSource.register(ParquetWalDataSource)
 
-    def register_full_bench(spark) -> None:
-        spark.dataSource.register(ParquetCdcBenchDataSource)
+def register_snapshot_bench(spark) -> None:
+    spark.dataSource.register(ParquetSnapshotDataSource)
 
-else:  # pragma: no cover
 
-    def register_snapshot_bench(spark) -> None:
-        raise ImportError("cdc_snapshot_bench requires the Spark 4 Python DataSource API")
+def register_wal_bench(spark) -> None:
+    spark.dataSource.register(ParquetWalDataSource)
 
-    def register_wal_bench(spark) -> None:
-        raise ImportError("cdc_wal_bench requires the Spark 4 Python DataSource API")
 
-    def register_full_bench(spark) -> None:
-        raise ImportError("cdc_full_bench requires the Spark 4 Python DataSource API")
+def register_full_bench(spark) -> None:
+    spark.dataSource.register(ParquetCdcBenchDataSource)

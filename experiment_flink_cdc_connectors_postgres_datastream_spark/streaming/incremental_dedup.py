@@ -82,7 +82,6 @@ class IncrementalMinHashDedup:
         *,
         bands: int = 8,
         rows: int = 4,
-        hash_family: str = "md5",
         min_jaccard: float = 0.3,
     ):
         self.spark = spark
@@ -92,7 +91,6 @@ class IncrementalMinHashDedup:
         self.pair_store = os.path.join(work_dir, "pairs")
         self.bands = bands
         self.rows = rows
-        self.hash_family = hash_family
         self.min_jaccard = min_jaccard
         self.n_hashes = bands * rows
 
@@ -255,16 +253,14 @@ class IncrementalMinHashDedup:
             )
         for store in (self.sig_store, self.band_store, self.pair_store):
             self._recover(store)
-        sig_new = minhash_signatures(batch_df, hash_family=self.hash_family)
+        sig_new = minhash_signatures(batch_df)
         sig_new.write.mode("overwrite").parquet(self._part(self.sig_store, batch_id))
         # band ONLY the new signatures (read back so banding runs over
         # the materialized store, not a re-shingle of the input)
         sig_new_stored = self.spark.read.parquet(self._part(self.sig_store, batch_id))
         banded_new = sig_new_stored.select(
             "_id",
-            F.posexplode(
-                minhash_bands(F.col("_sig"), self.bands, self.rows, hash_family=self.hash_family)
-            ).alias("_band", "_bh"),
+            F.posexplode(minhash_bands(F.col("_sig"), self.bands, self.rows)).alias("_band", "_bh"),
         )
         banded_new.write.mode("overwrite").parquet(self._part(self.band_store, batch_id))
 

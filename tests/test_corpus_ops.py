@@ -65,7 +65,7 @@ def test_simhash_lane_packing_matches_python_bitcount(spark):
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
 
-    feats = shingle_hashes(docs, "text", "doc_id", 3).collect()
+    feats = shingle_hashes(docs, "text", "doc_id", 3, hash_family="md5").collect()
     by_doc: dict[int, list[int]] = {}
     for r in feats:
         by_doc.setdefault(r["_id"], []).append(r["_sh"] & (2**64 - 1))

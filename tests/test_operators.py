@@ -75,6 +75,34 @@ def test_simhash_identical_docs_distance_zero(spark, docs):
     assert pairs.get((1, 4)) == 0
 
 
+def test_md5_long_matches_duckdb_md5_prefix(spark):
+    """Every signature hash is `md5_long` because DuckDB computes the
+    same value as ``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``.
+    Pin that contract directly: the empty string, ASCII, multi-byte
+    UTF-8, md5 prefixes starting at a hex digit >= 8 (the sign bit of
+    a 16-digit prefix), and NULL → NULL on both engines."""
+    import hashlib
+
+    import duckdb
+
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.operators.dedup import md5_long
+
+    texts = ["", "the quick brown fox", "abc", "日本語のテキスト", "naïve café", None]
+    prefixes = [hashlib.md5(t.encode()).hexdigest()[0] for t in texts if t is not None]
+    assert min(prefixes) < "8" <= max(prefixes)  # both halves of the hex range are covered
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, s string")
+    got = [r["h"] for r in df.select("i", md5_long(F.col("s")).alias("h")).orderBy("i").collect()]
+    con = duckdb.connect()
+    want = [
+        con.execute(
+            "SELECT CAST('0x' || substr(md5(CAST(? AS VARCHAR)), 1, 15) AS BIGINT)", [t]
+        ).fetchone()[0]
+        for t in texts
+    ]
+    assert got == want
+    assert got[-1] is None and all(h is not None and 0 <= h < 2**60 for h in got[:-1])
+
+
 @pytest.mark.parametrize("hash_family", ["xx", "md5"])
 def test_shingle_hashes_multi_order_is_union_of_single_orders(spark, docs, hash_family):
     """A tuple ``n`` emits, per document, exactly the grams of each

@@ -386,6 +386,8 @@ def test_wal2json_reader_warns_about_toast_blind_spot(caplog):
 
     assert PostgresCDCConfig().plugin_name == "pgoutput"
     assert PostgresCDCConfig.from_options({}).plugin_name == "pgoutput"
+    # every default comes from the dataclass, with no second copy in the parser
+    assert PostgresCDCConfig.from_options({}) == PostgresCDCConfig()
     with caplog.at_level(logging.WARNING):
         PostgresCDCStreamReader(
             PostgresCDCConfig(plugin_name="wal2json"), client=FakeClient()
@@ -1190,8 +1192,8 @@ def test_config_from_options_spelling_equivalence_property():
 
 def test_config_from_options_snake_case_wins_when_both_spellings_present():
     """Documented precedence: when a caller passes BOTH spellings of
-    one option, the snake_case one wins (opt() probes names in
-    declaration order) — pinned so the tiebreak never silently
+    one option, the snake_case one wins (from_options probes the
+    snake_case key first) — pinned so the tiebreak never silently
     flips."""
     cfg = PostgresCDCConfig.from_options(
         {"plugin_name": "wal2json", "pluginName": "pgoutput"}
@@ -1355,10 +1357,6 @@ def test_bench_source_camelcase_state_path_reaches_client(tmp_path):
     silently ran stateless."""
     import pyspark.sql.functions as F  # noqa: F401
 
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.snapshot_bench import _HAS_DATASOURCE_API
-
-    if not _HAS_DATASOURCE_API:
-        pytest.skip("needs the Spark 4 Python DataSource API")
     from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.snapshot_bench import ParquetWalDataSource
 
     state = str(tmp_path / "slot_state.json")
