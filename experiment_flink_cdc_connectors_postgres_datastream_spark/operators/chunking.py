@@ -77,7 +77,6 @@ def pack_sequences(
     text_col: str = "text",
     id_col: str = "doc_id",
     rows_per_group: int = 1_000_000,
-    group_hash: str = "xxhash64",
 ) -> DataFrame:
     """Greedy first-fit sequence packing: assign whole documents to
     bins of at most ``budget`` tokens (docs longer than the budget get
@@ -102,19 +101,15 @@ def pack_sequences(
     scans. Pass an explicit ``n_groups`` when bin ids must be
     reproducible across differently-sized clusters.
 
-    ``group_hash``: ``"xxhash64"`` (production default, single
-    codegen'd call) or ``"md5"`` (:func:`~..dedup.md5_long` of the id
-    rendered as a string — reproducible in any engine with md5, which
-    is what lets the registry grade the whole greedy packing against a
-    DuckDB recursive-CTE oracle)."""
+    The group hash is :func:`~..dedup.md5_long` of the id rendered as
+    a string — reproducible in any engine with md5, which is what lets
+    the registry grade the whole greedy packing against a DuckDB
+    recursive-CTE oracle."""
     if n_groups is None:
         n_groups = derive_pack_groups(
             df.count(), df.sparkSession.sparkContext.defaultParallelism, rows_per_group
         )
-    if group_hash == "md5":
-        grp = md5_long(F.col(id_col).cast("string"))
-    else:
-        grp = F.xxhash64(F.col(id_col))
+    grp = md5_long(F.col(id_col).cast("string"))
     counted = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.size(tokens(F.col(text_col))).alias("n_tokens"),

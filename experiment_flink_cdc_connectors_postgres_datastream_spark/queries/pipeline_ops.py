@@ -87,18 +87,15 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy token-budget sequence packing (budget 256): one row per
-    doc with its assigned bin. Graded variant pins ``n_groups=8`` and
-    the md5 group-hash family so the DuckDB oracle — a recursive CTE
-    that replays the same greedy next-fit scan per group, one
-    recursion step per row rank — is value-identical; production
-    default is xxhash64 grouping with input-scaled ``n_groups``
-    (`derive_pack_groups`), where the scan stays identical and only
-    the group assignment hash differs."""
+    doc with its assigned bin. Graded variant pins ``n_groups=8`` so
+    the DuckDB oracle — a recursive CTE that replays the same greedy
+    next-fit scan over the same md5 groups, one recursion step per row
+    rank — is value-identical; the production default derives
+    ``n_groups`` from the input (`derive_pack_groups`)."""
     return pack_sequences(
         load_table(spark, sf_dir, "documents"),
         budget=256,
         n_groups=8,
-        group_hash="md5",
     )
 
 

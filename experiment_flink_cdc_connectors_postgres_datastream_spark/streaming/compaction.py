@@ -109,6 +109,11 @@ def run_compacted_aggregate(
     the merge is idempotent (last-write-wins by seq), and a replayed
     batch rewrites the same generation.
 
+    The batch is used twice (its touched buckets, then the merge the
+    commit writes), so it is persisted for the duration of the batch
+    and unpersisted when the batch ends, failed or not: the source
+    and every expression over it are evaluated once per row.
+
     ``ttl_col``/``ttl`` (both None by default = the reference's
     idle-state-retention-0 semantics, sql-client-conf.yaml:16-17)
     opt the state into an event-time horizon via
@@ -145,7 +150,13 @@ def run_compacted_aggregate(
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        batch = store.with_bucket(batch)
+        batch = store.with_bucket(batch).persist()
+        try:
+            merge_commit_aggregate(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    def merge_commit_aggregate(batch: DataFrame, batch_id: int) -> None:
         # touched bucket ids: bounded by n_buckets, so the collect is
         # a tiny driver list, never data rows
         touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]

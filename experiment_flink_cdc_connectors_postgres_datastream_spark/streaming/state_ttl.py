@@ -41,7 +41,11 @@ import json
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+    GenerationalStateStore,
+    read_generation,
+    recorded_schema,
+)
 
 
 class TTLStateStore(GenerationalStateStore):
@@ -158,7 +162,7 @@ class TTLStateStore(GenerationalStateStore):
                 f"touched buckets span generations immediately after commit: {sorted(gens)}"
             )
         row = (
-            self.spark.read.parquet(f"{self.root}/{gens.pop()}")
+            read_generation(self.spark, f"{self.root}/{gens.pop()}", recorded_schema(manifest))
             .agg(F.max(self.ttl_col))
             .collect()[0]
         )

@@ -8,10 +8,13 @@ StreamingJobWithCustomDeserializer.java:183-194, made 100-TB-viable):
 1. **Incremental I/O.** State rows are hash-partitioned into
    ``n_buckets`` by key (``pmod(xxhash64(keys), n)``), and each
    generation directory ``gen-<v>/_bucket=<b>/`` holds complete
-   current contents for the buckets it owns. A micro-batch rewrites
-   ONLY the buckets its keys touch; a manifest maps every bucket to
-   the generation that currently owns it. Per-batch write I/O is
-   O(touched state), not O(total state).
+   current contents for the buckets it owns, in ONE parquet file per
+   bucket (rows are clustered by bucket before the partitioned write,
+   so later scans pay one task per touched bucket, not one per write
+   task × bucket). A micro-batch rewrites ONLY the buckets its keys
+   touch; a manifest maps every bucket to the generation that
+   currently owns it. Per-batch write I/O is O(touched state), not
+   O(total state).
 
 2. **Atomic commit.** Nothing is ever overwritten in place: a batch
    writes a brand-new generation directory, then publishes it by
@@ -24,7 +27,9 @@ StreamingJobWithCustomDeserializer.java:183-194, made 100-TB-viable):
 
 All filesystem access goes through the Hadoop FileSystem API of the
 active session (never ``os.path``), so the store works unchanged on
-HDFS/S3A/local paths.
+HDFS/S3A/local paths. Every generation is written by
+:func:`write_buckets` and read by :func:`read_generation` with the
+schema the manifest records, so a read runs no footer-inference job.
 
 Generation buildup is bounded: when a manifest would reference more
 than ``max_generations`` distinct directories, the next commit is
@@ -46,6 +51,28 @@ BUCKET_COL = "_bucket"
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id for a row: pmod(xxhash64(keys), n)."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+def write_buckets(df: DataFrame, path: str, mode: str) -> None:
+    """The one bucketed write (commit, savepoint, restore): rows are
+    clustered by ``_bucket`` first, so each bucket is written by one
+    task and its ``_bucket=<b>`` directory holds one parquet file."""
+    df.repartition(BUCKET_COL).write.mode(mode).partitionBy(BUCKET_COL).parquet(path)
+
+
+def recorded_schema(manifest: dict) -> StructType | None:
+    """The committed schema a manifest records; None for a manifest
+    that predates schema recording."""
+    schema_json = manifest.get("schema")
+    return None if schema_json is None else StructType.fromJson(json.loads(schema_json))
+
+
+def read_generation(spark: SparkSession, path: str, schema: StructType | None) -> DataFrame:
+    """The one generation read: with the recorded schema it fires no
+    schema-inference job; without one (a manifest that predates schema
+    recording) Spark infers it from the parquet footers."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 class _Fs:
@@ -190,14 +217,14 @@ class GenerationalStateStore:
                 continue  # empty-bucket marker: known empty, nothing to scan
             if buckets is None or b in buckets:
                 owned.setdefault(gen, []).append(b)
+        schema = recorded_schema(manifest)
         parts = []
         for gen, bs in sorted(owned.items()):
             # filter (not explicit partition paths): partition pruning
             # reads only the owned _bucket= dirs, and buckets this gen
             # wrote but no longer owns are excluded.
-            df = (
-                self.spark.read.parquet(f"{self.root}/{gen}")
-                .filter(F.col(BUCKET_COL).isin([int(b) for b in bs]))
+            df = read_generation(self.spark, f"{self.root}/{gen}", schema).filter(
+                F.col(BUCKET_COL).isin([int(b) for b in bs])
             )
             parts.append(df)
         if not parts:
@@ -206,19 +233,11 @@ class GenerationalStateStore:
             # table from the manifest's committed schema. None only for
             # a legacy manifest that predates schema recording — the
             # old "nothing to read" contract.
-            return self._empty_state(manifest)
+            return None if schema is None else self.spark.createDataFrame([], schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    def _empty_state(self, manifest: dict) -> DataFrame | None:
-        schema_json = manifest.get("schema")
-        if schema_json is None:
-            return None
-        return self.spark.createDataFrame(
-            [], StructType.fromJson(json.loads(schema_json))
-        )
 
     # -- commits --------------------------------------------------------------
 
@@ -302,11 +321,9 @@ class GenerationalStateStore:
         backfills the ``schema`` key, making the typed-empty read
         contract universal from then on."""
         manifest = self._current_manifest()
-        prev_schema_json = (manifest or {}).get("schema")
-        if prev_schema_json is not None:
-            prev_fp = self._schema_fingerprint(
-                StructType.fromJson(json.loads(prev_schema_json))
-            )
+        prev_schema = recorded_schema(manifest or {})
+        if prev_schema is not None:
+            prev_fp = self._schema_fingerprint(prev_schema)
             new_fp = self._schema_fingerprint(df.schema)
             if new_fp != prev_fp:
                 added = sorted(set(new_fp) - set(prev_fp))
@@ -333,11 +350,7 @@ class GenerationalStateStore:
         while self._io.exists(self._io.path(gen)):
             attempt += 1
             gen = f"gen-{version}-r{attempt}"
-        (
-            df.write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(f"{self.root}/{gen}")
-        )
+        write_buckets(df, f"{self.root}/{gen}", "overwrite")
         # Empty-bucket markers: partitionBy only creates a _bucket=<b>
         # directory for buckets that received rows. A touched bucket
         # with NO directory was committed empty (every key deleted /
@@ -355,7 +368,7 @@ class GenerationalStateStore:
             "bucket_cols": self.bucket_cols,
             "buckets": buckets,
             # committed schema: lets an all-empty store read back as a
-            # typed zero-row table (see _empty_state)
+            # typed zero-row table (see read)
             "schema": df.schema.json(),
         }
         self._io.write_text_atomic(
@@ -407,7 +420,7 @@ class GenerationalStateStore:
         # cleanup fires on a write-phase failure; a retry gets the
         # pre-check's remediation message instead of a confusing
         # errorifexists error.
-        state.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(f"{path}/gen-0")
+        write_buckets(state, f"{path}/gen-0", "errorifexists")
         try:
             # same empty-bucket contract as commit: buckets with no rows at
             # snapshot time (including the whole-store-empty case, whose
@@ -468,9 +481,11 @@ class GenerationalStateStore:
         # with no parquet footers — nothing to copy, and reading it
         # would crash; the restored manifest alone carries the state
         if any(g is not None for g in manifest["buckets"].values()):
-            spark.read.parquet(f"{savepoint_path}/gen-0").write.mode(
-                "errorifexists"
-            ).partitionBy(BUCKET_COL).parquet(f"{root}/gen-0")
+            write_buckets(
+                read_generation(spark, f"{savepoint_path}/gen-0", recorded_schema(manifest)),
+                f"{root}/gen-0",
+                "errorifexists",
+            )
         new_manifest = {
             "n_buckets": n_buckets,
             # record the source store's EFFECTIVE layout: a

@@ -794,6 +794,55 @@ def test_statestore_reads_are_partition_pruned_to_owned_buckets(spark, tmp_path)
     assert BUCKET_COL in plan.split("PartitionFilters", 1)[1][:200], plan
 
 
+def test_commit_writes_one_file_per_bucket(spark, tmp_path):
+    """Rows are clustered by bucket before the partitioned write, so a
+    generation holds one parquet file per bucket however many tasks
+    produced the committed frame (here 8 round-robin partitions, each
+    holding rows of every bucket)."""
+    store = _mk(spark, tmp_path, n_buckets=4)
+    rows = spark.createDataFrame([(k, f"v{k}") for k in range(200)], "k long, v string")
+    store.commit(store.with_bucket(rows.repartition(8)), list(range(4)), version=0)
+    gen = tmp_path / "state" / "gen-0"
+    bucket_dirs = sorted(p for p in gen.iterdir() if p.name.startswith(f"{BUCKET_COL}="))
+    assert len(bucket_dirs) == 4
+    for d in bucket_dirs:
+        assert len([f for f in d.iterdir() if f.name.endswith(".parquet")]) == 1, d
+
+
+def test_read_with_recorded_schema_fires_no_spark_job(spark, tmp_path):
+    """read() takes the schema the manifest records instead of
+    inferring it from parquet footers, so building the state frame
+    runs no job. The control read afterwards infers a schema in a
+    second group; once the status tracker has seen that job, it has
+    seen every earlier one, so the empty first group is not a
+    listener-bus lag."""
+    import time
+
+    store = _mk(spark, tmp_path, n_buckets=4)
+    _commit_rows(spark, store, [(k, f"v{k}") for k in range(20)], version=0)
+    _commit_rows(spark, store, [(1, "w1")], version=1)
+    assert store.gen_count() == 2  # the read unions two generations
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    try:
+        sc.setJobGroup("test-statestore-declared", "read, recorded schema")
+        store.read()
+        store.read(buckets=[0, 1])
+        sc.setJobGroup("test-statestore-inferred", "control: schema inference")
+        spark.read.parquet(str(tmp_path / "state" / "gen-0"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("test-statestore-inferred"):
+        assert time.monotonic() < deadline, "control read fired no job"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("test-statestore-declared") == []
+    assert {(r["k"], r["v"]) for r in store.read().collect()} == (
+        {(k, f"v{k}") for k in range(20) if k != 1} | {(1, "w1")}
+    )
+
+
 def test_ttl_single_generation_invariant_is_loud_not_assert(spark, tmp_path):
     """ADVICE r13: the commit-time single-generation invariant must
     survive `python -O` — a stripped assert would let the watermark

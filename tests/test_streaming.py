@@ -813,6 +813,84 @@ def test_run_compacted_aggregate_refuses_reserved_src_rank_column(spark, tmp_pat
         )
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _counted_key_stream(spark, tmp_path, n):
+    """One file of ``n`` rows as a one-micro-batch stream whose key is
+    derived by a Python UDF that counts its calls in an accumulator;
+    every later column depends on the key, so no pruning drops it."""
+    import json as _json
+
+    d = tmp_path / "counted_src"
+    d.mkdir()
+    (d / "b1.json").write_text(
+        "\n".join(_json.dumps({"id": i, "seq": i, "grp": i % 3}) for i in range(n)) + "\n"
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def derive_key(i):
+        calls.add(1)
+        return f"k{i}"
+
+    stream = spark.readStream.schema("id long, seq long, grp long").json(str(d))
+    return stream.withColumn("key", derive_key("id")), calls
+
+
+def test_compacted_aggregate_evaluates_each_batch_row_once(spark, tmp_path):
+    """The micro-batch is used twice (touched buckets, then the merge
+    the commit writes); persisting it makes the source and every
+    expression over it run once per row, not once per use. The batch
+    is unpersisted when it ends."""
+    n = 40
+    stream, calls = _counted_key_stream(spark, tmp_path, n)
+    spark.catalog.clearCache()
+    counts = {}
+
+    def sink(agg, batch_id):
+        counts.update({r["grp"]: r["user_count"] for r in agg.collect()})
+
+    q = run_compacted_aggregate(
+        stream,
+        state_dir=str(tmp_path / "state"),
+        key_cols=["key"],
+        seq_cols=["seq"],
+        group_cols=["grp"],
+        sink=sink,
+        query_name="counted_once",
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert counts == {0: 14, 1: 13, 2: 13}
+    assert calls.value == n
+    assert _cache_is_empty(spark)
+
+
+def test_compacted_aggregate_unpersists_a_failed_batch(spark, tmp_path):
+    """A batch whose sink raises still unpersists its input."""
+    stream, _ = _counted_key_stream(spark, tmp_path, 10)
+    spark.catalog.clearCache()
+
+    def sink(agg, batch_id):
+        raise RuntimeError("sink down")
+
+    q = run_compacted_aggregate(
+        stream,
+        state_dir=str(tmp_path / "state"),
+        key_cols=["key"],
+        seq_cols=["seq"],
+        group_cols=["grp"],
+        sink=sink,
+        query_name="failed_unpersist",
+    )
+    with pytest.raises(Exception, match="sink down"):
+        q.processAllAvailable()
+    q.stop()
+    assert _cache_is_empty(spark)
+
+
 def test_incremental_dedup_foreign_commit_log_never_folds_running_batch(spark, tmp_path):
     """ADVICE r10: if foreach_batch is handed a stale/mismatched
     checkpoint dir whose commits/ log already names the RUNNING batch
