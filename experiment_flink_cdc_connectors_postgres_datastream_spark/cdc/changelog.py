@@ -71,7 +71,6 @@ def count_live_by(
     key_cols: list[str],
     seq_cols: list[str],
     op_col: str | None = None,
-    count_alias: str = "user_count",
 ) -> DataFrame:
     """Changelog-correct grouped count: COUNT of live keys per group
     (the reference's `SELECT schema, COUNT(1) AS user_count … GROUP BY
@@ -80,8 +79,9 @@ def count_live_by(
     Group membership of a key is decided by its LATEST row (an update
     that moves a key between groups counts in the new group only).
     """
-    live = compact_latest(df, key_cols, seq_cols, op_col=op_col)
-    return live.groupBy(*[F.col(g) for g in group_cols]).agg(F.count(F.lit(1)).alias(count_alias))
+    return agg_live_by(
+        df, group_cols, key_cols, seq_cols, [F.count(F.lit(1)).alias("user_count")], op_col=op_col
+    )
 
 
 def agg_live_by(

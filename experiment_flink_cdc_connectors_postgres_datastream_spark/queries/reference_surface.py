@@ -277,7 +277,7 @@ def count_live_by_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 changelog-correct COUNT: distinct live keys per group — an
     update must not double count (README.md:108-114)."""
     ev = load_table(spark, sf_dir, "events")
-    return count_live_by(ev, ["event_type"], ["user_id"], ["ts", "event_id"], count_alias="user_count")
+    return count_live_by(ev, ["event_type"], ["user_id"], ["ts", "event_id"])
 
 
 @register(
@@ -440,9 +440,7 @@ def cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pg-schema (A1). Reproduces `user_count_by_pgschema`
     (README.md:106-114) at scale."""
     keyed = _flat_users(spark, sf_dir)
-    counts = count_live_by(
-        keyed, ["schema"], ["key"], ["ts_ms", "lsn"], op_col="op", count_alias="user_count"
-    )
+    counts = count_live_by(keyed, ["schema"], ["key"], ["ts_ms", "lsn"], op_col="op")
     return counts.select(F.col("schema").alias("pgschema"), "user_count")
 
 
@@ -979,9 +977,7 @@ def bus_roundtrip_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_cols=[f.name for f in value_schema.fields],
     )
     back = changelog_from_bus(wire, value_schema)
-    counts = count_live_by(
-        back, ["schema"], ["key"], ["ts_ms", "lsn"], op_col="op", count_alias="user_count"
-    )
+    counts = count_live_by(back, ["schema"], ["key"], ["ts_ms", "lsn"], op_col="op")
     return counts.select(F.col("schema").alias("pgschema"), "user_count")
 
 
@@ -1300,9 +1296,7 @@ def bus_table_compact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         spool_frames(wire.coalesce(4), spool, seq=0)
         register_bus_table(spark, name, spool)
         back = changelog_from_bus(spark.table(name), value_schema)
-        counts = count_live_by(
-            back, ["schema"], ["key"], ["ts_ms", "lsn"], op_col="op", count_alias="user_count"
-        )
+        counts = count_live_by(back, ["schema"], ["key"], ["ts_ms", "lsn"], op_col="op")
         pdf = counts.select(F.col("schema").alias("pgschema"), "user_count").toPandas()
     finally:
         try:

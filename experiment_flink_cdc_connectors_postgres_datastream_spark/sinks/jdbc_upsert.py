@@ -25,6 +25,19 @@ from collections.abc import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog import compact_latest
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import (
+    ROW_SEQ,
+    SRC_RANK,
+    merge_batch,
+    reject_internal_columns,
+    touched_buckets,
+)
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+    BUCKET_COL,
+    GenerationalStateStore,
+)
+
 
 def _connect(dsn: str):
     """psycopg2 when available, else the bundled protocol client (loud
@@ -219,7 +232,11 @@ class ParquetUpsertSink:
     - state lives in a :class:`GenerationalStateStore` — each batch
       rewrites only the key-hash buckets it touches and publishes via
       an atomic manifest rename, so a crash mid-write can never
-      destroy previously-committed rows;
+      destroy previously-committed rows. The merge is
+      ``compaction.merge_batch`` (shared with ``run_compacted_aggregate``)
+      with the order ``["_src_rank", *seq_cols, "_row_seq"]``: a batch
+      row always beats prior state, as ``ON CONFLICT DO UPDATE`` does,
+      and an input carrying either internal column is refused;
     - within a batch, duplicate keys are resolved by ``seq_cols``
       (highest wins); without ``seq_cols`` the last occurrence *within
       each partition* wins (``monotonically_increasing_id`` orders rows
@@ -231,7 +248,8 @@ class ParquetUpsertSink:
       the aggregate over full live state each micro-batch): keys
       absent from the batch are DELETED, so a group whose live count
       transiently drops to zero cannot leave a stale row behind. The
-      commit rewrites all buckets, which is fine precisely because a
+      batch is deduplicated by ``[*seq_cols, "_row_seq"]`` and
+      committed to all buckets, which is fine precisely because a
       full-state aggregate is group-cardinality-sized, not data-sized.
     """
 
@@ -249,9 +267,7 @@ class ParquetUpsertSink:
         self.bucket_cols = bucket_cols
         self._store = None
 
-    def _get_store(self, spark: SparkSession):
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
-
+    def _get_store(self, spark: SparkSession) -> GenerationalStateStore:
         if self._store is None:
             self._store = GenerationalStateStore(
                 spark, self.path, self.key_cols, n_buckets=self.n_buckets,
@@ -260,46 +276,16 @@ class ParquetUpsertSink:
         return self._store
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog import compact_latest
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
-
-        spark = df.sparkSession
-        store = self._get_store(spark)
-        # _gen separates old state (0) from this batch (1); _row_seq
-        # makes the within-batch winner deterministic when seq_cols
-        # don't fully order duplicates (last occurrence wins).
-        batch = store.with_bucket(
-            df.withColumn("_gen", F.lit(1)).withColumn(
-                "_row_seq", F.monotonically_increasing_id()
-            )
-        )
-        if self.refresh:
-            # batch IS the whole table: dedupe within it, then rewrite
-            # every bucket so absent keys (empty groups) are deleted
-            compacted = compact_latest(
-                batch, self.key_cols, ["_gen", *self.seq_cols, "_row_seq"]
-            ).drop("_gen", "_row_seq")
-            store.commit(compacted, list(range(store.n_buckets)), version=batch_id)
+        reject_internal_columns(df.columns, "ParquetUpsertSink")
+        store = self._get_store(df.sparkSession)
+        if not self.refresh:
+            merge_batch(store, df, self.key_cols, [SRC_RANK, *self.seq_cols, ROW_SEQ], batch_id)
             return
-        touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-        full = store.gen_count() >= store.max_generations
-        prev = store.read(buckets=None if full else touched)
-        merged = batch
-        if prev is not None:
-            merged = prev.withColumn("_gen", F.lit(0)).withColumn(
-                "_row_seq", F.lit(0).cast("long")
-            ).unionByName(batch)
-        # compacted still carries _bucket (part of the payload)
-        compacted = compact_latest(
-            merged, self.key_cols, ["_gen", *self.seq_cols, "_row_seq"]
-        ).drop("_gen", "_row_seq")
-        store.commit(
-            compacted,
-            list(range(store.n_buckets)) if full else touched,
-            version=batch_id,
-        )
+        # batch IS the whole table: dedupe within it, then rewrite
+        # every bucket so absent keys (empty groups) are deleted
+        batch = store.with_bucket(df.withColumn(ROW_SEQ, F.monotonically_increasing_id()))
+        compacted = compact_latest(batch, self.key_cols, [*self.seq_cols, ROW_SEQ]).drop(ROW_SEQ)
+        store.commit(compacted, list(range(store.n_buckets)), version=batch_id)
 
     def touched_buckets(self, df: DataFrame) -> list[int]:
         """Bucket ids the given rows map to, computed with the STORE's
@@ -307,13 +293,7 @@ class ParquetUpsertSink:
         values are overridden by an existing store's manifest — using
         them directly would prune the wrong buckets on reopen).
         Bounded collect: at most n_buckets ints."""
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
-
-        store = self._get_store(df.sparkSession)
-        return [
-            r[0]
-            for r in store.with_bucket(df).select(BUCKET_COL).distinct().collect()
-        ]
+        return touched_buckets(self._get_store(df.sparkSession).with_bucket(df))
 
     def read(self, spark: SparkSession, buckets: list[int] | None = None) -> DataFrame:
         """Committed state; with ``buckets``, a partition-pruned read of
@@ -327,6 +307,4 @@ class ParquetUpsertSink:
         state = self._get_store(spark).read(buckets=buckets)
         if state is None:
             raise FileNotFoundError(f"ParquetUpsertSink: no committed state at {self.path}")
-        from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
-
         return state.drop(BUCKET_COL)

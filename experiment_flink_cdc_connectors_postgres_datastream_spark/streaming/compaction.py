@@ -30,7 +30,10 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog imp
     resolve_unavailable,
 )
 from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import BUCKET_COL
+from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+    BUCKET_COL,
+    GenerationalStateStore,
+)
 
 
 def merge_latest(
@@ -80,6 +83,79 @@ def merge_latest(
     return pd.Series([rows[-1][c] for c in cols], index=cols)
 
 
+#: internal columns the merge adds: ``_src_rank`` (state 0, batch 1)
+#: and, when the order names it, ``_row_seq`` (arrival in a partition)
+SRC_RANK, ROW_SEQ = "_src_rank", "_row_seq"
+
+
+def reject_internal_columns(columns: list[str], caller: str) -> None:
+    """Refuse an input carrying a column the merge adds: the merge
+    would silently overwrite, then drop it."""
+    clash = [c for c in (SRC_RANK, ROW_SEQ) if c in columns]
+    if clash:
+        raise ValueError(
+            f"{caller} reserves the internal column names {[SRC_RANK, ROW_SEQ]} "
+            f"for its keyed merge; the input already carries {clash}: rename it."
+        )
+
+
+def touched_buckets(bucketed: DataFrame) -> list[int]:
+    """Distinct ``_bucket`` ids: a collect of at most n_buckets ints."""
+    return [r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()]
+
+
+def merge_batch(
+    store: GenerationalStateStore,
+    batch: DataFrame,
+    key_cols: list[str],
+    order: list[str],
+    version: int,
+    *,
+    op_col: str | None = None,
+    unavailable_col: str | None = None,
+) -> bool:
+    """The one keyed merge of a batch into the store's latest-per-key
+    state: state of the touched buckets (of all buckets once the store
+    owns ``max_generations`` generations: a full compaction) ∪ batch →
+    TOAST resolution when ``unavailable_col`` is present (resolved
+    state rows seed the carry) → latest row per key by ``order`` →
+    commit as generation ``version``. False for an empty batch.
+
+    ``order`` picks the winner: ``[*seq_cols, "_src_rank"]`` (highest
+    seq; on a tie the batch beats state) or ``["_src_rank", *seq_cols,
+    "_row_seq"]`` (a batch row always wins, as ``ON CONFLICT DO
+    UPDATE`` does; then highest seq, then last arrival).
+
+    The batch is persisted for the call (the touched-bucket collect and
+    the commit both use it, so each row is evaluated once) and
+    unpersisted when the call ends, failed or not."""
+    cached = store.with_bucket(batch).persist()
+    try:
+        touched = touched_buckets(cached)
+        if not touched:
+            return False
+        full_compaction = store.gen_count() >= store.max_generations
+        prev = store.read(buckets=None if full_compaction else touched)
+
+        def tagged(df: DataFrame, rank: int, row_seq: F.Column) -> DataFrame:
+            df = df.withColumn(SRC_RANK, F.lit(rank))
+            return df.withColumn(ROW_SEQ, row_seq) if ROW_SEQ in order else df
+
+        merged = tagged(cached, 1, F.monotonically_increasing_id())
+        if prev is not None:
+            merged = tagged(prev, 0, F.lit(0).cast("long")).unionByName(merged)
+        if unavailable_col is not None and unavailable_col in merged.columns:
+            reserved = {*key_cols, *order, unavailable_col, BUCKET_COL, op_col}
+            value_cols = [c for c in merged.columns if c not in reserved]
+            merged = resolve_unavailable(merged, key_cols, order, value_cols, unavailable_col, op_col=op_col)
+        compacted = compact_latest(merged, key_cols, order, op_col=op_col, drop_deletes=False)
+        scope = list(range(store.n_buckets)) if full_compaction else touched
+        store.commit(compacted.drop(SRC_RANK, ROW_SEQ), scope, version=version)
+        return True
+    finally:
+        cached.unpersist()
+
+
 def run_compacted_aggregate(
     stream: DataFrame,
     state_dir: str,
@@ -87,7 +163,6 @@ def run_compacted_aggregate(
     seq_cols: list[str],
     group_cols: list[str],
     op_col: str | None = None,
-    count_alias: str = "user_count",
     agg_exprs: list[F.Column] | None = None,
     sink: Callable[[DataFrame, int], None] | None = None,
     checkpoint_dir: str | None = None,
@@ -101,18 +176,16 @@ def run_compacted_aggregate(
     JDBC upsert, StreamingJobWithCustomDeserializer.java:156-194) as a
     foreachBatch pipeline over bucketed generational parquet state.
 
-    Each micro-batch: read state for the buckets the batch touches ∪
-    batch → compact_latest → commit ONLY those buckets as a new
-    generation (atomic manifest flip, :class:`GenerationalStateStore`)
-    → changelog-correct aggregate over the full state → ``sink(agg_df,
-    batch_id)``. Restart-safe: the checkpoint tracks source progress,
-    the merge is idempotent (last-write-wins by seq), and a replayed
-    batch rewrites the same generation.
-
-    The batch is used twice (its touched buckets, then the merge the
-    commit writes), so it is persisted for the duration of the batch
-    and unpersisted when the batch ends, failed or not: the source
-    and every expression over it are evaluated once per row.
+    Each micro-batch: :func:`merge_batch` with the order
+    ``[*seq_cols, "_src_rank"]`` (highest seq wins; on a tie the batch
+    beats state) commits ONLY the touched buckets as a new generation
+    (atomic manifest flip) → changelog-correct aggregate over the full
+    state (default ``COUNT(1) AS user_count``) → ``sink(agg_df,
+    batch_id)``. The sink's merge (``ParquetUpsertSink``) is the same
+    function with the order ``["_src_rank", *seq_cols, "_row_seq"]``.
+    Restart-safe: the checkpoint tracks source progress, the merge is
+    idempotent (last-write-wins by seq), and a replayed batch rewrites
+    the same generation.
 
     ``ttl_col``/``ttl`` (both None by default = the reference's
     idle-state-retention-0 semantics, sql-client-conf.yaml:16-17)
@@ -125,83 +198,31 @@ def run_compacted_aggregate(
     Replay-deterministic: the watermark is the max committed event
     time, never a wall clock.
     """
-    if "_src_rank" in stream.columns:
-        # reserved internal tiebreak name: withColumn below would
-        # silently overwrite (then drop) a caller column of that name,
-        # and the reserved-set exclusion would also hide it from TOAST
-        # value resolution — refuse loudly instead of corrupting it
-        raise ValueError(
-            "run_compacted_aggregate reserves the internal column name "
-            "'_src_rank' for its state-vs-batch seq tiebreak; the input "
-            "stream already carries a column of that name — rename it "
-            "before compacting."
-        )
-    spark = stream.sparkSession
+    reject_internal_columns(stream.columns, "run_compacted_aggregate")
     # TTLStateStore with ttl=None is behavior-identical to the base
     # store (regression-tested byte-for-byte), so the default path is
     # unchanged reference semantics.
     store = TTLStateStore(
-        spark,
+        stream.sparkSession,
         os.path.join(state_dir, "state"),
         key_cols,
         n_buckets=n_buckets,
         ttl_col=ttl_col,
         ttl=ttl,
     )
+    order = [*seq_cols, SRC_RANK]
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        batch = store.with_bucket(batch).persist()
-        try:
-            merge_commit_aggregate(batch, batch_id)
-        finally:
-            batch.unpersist()
-
-    def merge_commit_aggregate(batch: DataFrame, batch_id: int) -> None:
-        # touched bucket ids: bounded by n_buckets, so the collect is
-        # a tiny driver list, never data rows
-        touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-        if not touched:
+        if not merge_batch(
+            store, batch, key_cols, order, batch_id,
+            op_col=op_col, unavailable_col=unavailable_col,
+        ):
             return
-        full_compaction = store.gen_count() >= store.max_generations
-        scope = None if full_compaction else touched
-        prev = store.read(buckets=scope)
-        # `_src_rank` makes state-vs-batch seq ties deterministic
-        # (state first, so an equal seq from the new batch wins) —
-        # the SQL-path mirror of merge_latest's stable-sort contract.
-        # Ranks: restored state 0, batch 1.
-        batch = batch.withColumn("_src_rank", F.lit(1))
-        merged = (
-            batch
-            if prev is None
-            else prev.withColumn("_src_rank", F.lit(0)).unionByName(batch)
-        )
-        tie_seq = [*seq_cols, "_src_rank"]
-        if unavailable_col is not None and unavailable_col in merged.columns:
-            # TOAST resolution over state ∪ batch: committed state
-            # rows are already resolved (markers cleared below), so
-            # they seed the per-key carry-forward for this batch's
-            # marked columns — cross-batch semantics without keeping
-            # history
-            reserved = set(key_cols) | set(seq_cols) | {unavailable_col, BUCKET_COL, "_src_rank"}
-            if op_col is not None:
-                reserved.add(op_col)
-            value_cols = [c for c in merged.columns if c not in reserved]
-            merged = resolve_unavailable(
-                merged, key_cols, tie_seq, value_cols, unavailable_col, op_col=op_col
-            )
-        compacted = compact_latest(
-            merged, key_cols, tie_seq, op_col=op_col, drop_deletes=False
-        ).drop("_src_rank")
-        store.commit(
-            compacted,
-            list(range(store.n_buckets)) if full_compaction else touched,
-            version=batch_id,
-        )
         live = store.read()
         if op_col is not None:
             live = live.filter(~F.col(op_col).eqNullSafe(F.lit(DELETE_OP)))
         agg = live.groupBy(*[F.col(g) for g in group_cols]).agg(
-            *(agg_exprs if agg_exprs else [F.count(F.lit(1)).alias(count_alias)])
+            *(agg_exprs or [F.count(F.lit(1)).alias("user_count")])
         )
         if sink is not None:
             sink(agg, batch_id)

@@ -59,7 +59,6 @@ def live_count_with_state(
     key_col: str = "key",
     seq_cols: tuple[str, ...] = ("ts_ms", "lsn"),
     op_col: str = "op",
-    count_alias: str = "user_count",
     tombstone_retention: int | None = None,
     max_keys_per_group: int | None = 10_000_000,
 ) -> DataFrame:
@@ -125,11 +124,11 @@ def live_count_with_state(
             )
         )
         n = sum(1 for _, lv in reg.values() if lv)
-        yield pd.DataFrame({group_col: [key[0]], count_alias: [n]})
+        yield pd.DataFrame({group_col: [key[0]], "user_count": [n]})
 
     return flat.groupBy(group_col).applyInPandasWithState(
         update,
-        outputStructType=f"{group_col} string, {count_alias} long",
+        outputStructType=f"{group_col} string, user_count long",
         stateStructType="keys array<string>, seqs array<array<long>>, live array<boolean>",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,

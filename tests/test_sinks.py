@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pyspark.sql.functions as F
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -187,10 +188,10 @@ def test_parquet_upsert_sink_matches_pure_python_model_property(spark, tmp_path)
     schedules (merge and refresh modes), foreachBatch RETRIES of the
     same batch id, and sink REOPENS (a fresh object over the same
     store path, the restart shape) must match a pure-Python dict
-    replay exactly. The replayed contract, stated by the seq order
-    ["_gen", *seq_cols, "_row_seq"]: a batch row always beats prior
-    state (_gen leads), within a batch the highest seq wins, and in
-    refresh mode keys absent from the batch are deleted."""
+    replay exactly. The replayed contract, stated by the merge order
+    ["_src_rank", *seq_cols, "_row_seq"]: a batch row always beats
+    prior state (_src_rank leads), within a batch the highest seq wins,
+    and in refresh mode keys absent from the batch are deleted."""
     import uuid as _uuid
 
     from hypothesis import given, settings
@@ -299,3 +300,112 @@ def test_parquet_upsert_sink_refresh_empty_batch_reads_as_empty(spark, tmp_path)
     # ...and can empty AGAIN (marker path is re-entrant)
     sink(spark.createDataFrame([], "k long, v long"), 4)
     assert sink.read(spark).count() == 0
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _counted_key_frame(spark, tmp_path, n):
+    """``n`` rows read from one JSON file, keyed by a Python UDF that
+    counts its calls in an accumulator."""
+    src = tmp_path / "counted.json"
+    src.write_text("\n".join(json.dumps({"id": i, "seq": i}) for i in range(n)) + "\n")
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def derive_key(i):
+        calls.add(1)
+        return f"k{i % 7}"
+
+    df = spark.read.schema("id long, seq long").json(str(src))
+    return df.withColumn("k", derive_key("id")), calls
+
+
+def test_parquet_upsert_sink_evaluates_each_input_row_once(spark, tmp_path):
+    """A non-refresh call uses its input twice (touched buckets, then
+    the merge the commit writes); the shared keyed merge persists it,
+    so every expression over the input runs once per row, and the
+    cache is empty again when the call returns."""
+    n = 40
+    df, calls = _counted_key_frame(spark, tmp_path, n)
+    spark.catalog.clearCache()
+    sink = ParquetUpsertSink(str(tmp_path / "sink"), key_cols=["k"], seq_cols=["seq"])
+    sink(df, 0)
+    assert calls.value == n
+    assert _cache_is_empty(spark)
+    got = {r["k"]: r["seq"] for r in sink.read(spark).collect()}
+    assert got == {f"k{r}": max(i for i in range(n) if i % 7 == r) for r in range(7)}
+
+
+def test_parquet_upsert_sink_unpersists_when_commit_fails(spark, tmp_path, monkeypatch):
+    """A call whose commit raises still unpersists its input."""
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
+
+    df, _ = _counted_key_frame(spark, tmp_path, 10)
+    spark.catalog.clearCache()
+
+    def commit(self, df, touched_buckets, version):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(GenerationalStateStore, "commit", commit)
+    sink = ParquetUpsertSink(str(tmp_path / "sink"), key_cols=["k"], seq_cols=["seq"])
+    with pytest.raises(RuntimeError, match="commit failed"):
+        sink(df, 0)
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.parametrize("refresh", [False, True])
+@pytest.mark.parametrize("internal", ["_src_rank", "_row_seq"])
+def test_parquet_upsert_sink_refuses_internal_columns(spark, tmp_path, internal, refresh):
+    """The keyed merge adds `_src_rank` and `_row_seq`, then drops them:
+    a caller column of either name would silently vanish, so the sink
+    refuses it before writing anything."""
+    sink = ParquetUpsertSink(str(tmp_path / "sink"), key_cols=["k"], refresh=refresh)
+    df = spark.createDataFrame([("a", 1)], f"k string, {internal} long")
+    with pytest.raises(ValueError, match=internal):
+        sink(df, 0)
+    assert not (tmp_path / "sink").exists()
+
+
+def test_parquet_upsert_sink_promotes_to_full_compaction(spark, tmp_path):
+    """Once the sink's store owns max_generations generations, the next
+    non-refresh batch rewrites every bucket into one generation, and
+    the table still equals a dict model of the batches."""
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+        GenerationalStateStore,
+        bucket_expr,
+    )
+
+    n_buckets = 16
+    path = str(tmp_path / "sink")
+    bucket_of = {
+        r["k"]: r["b"]
+        for r in spark.range(64)
+        .select(F.col("id").alias("k"), bucket_expr(["id"], n_buckets).alias("b"))
+        .collect()
+    }
+    keys, seen = [], set()
+    for k, b in sorted(bucket_of.items()):
+        if b not in seen:
+            seen.add(b)
+            keys.append(k)
+    sink = ParquetUpsertSink(path, key_cols=["k"], seq_cols=["seq"], n_buckets=n_buckets)
+
+    def store():
+        return GenerationalStateStore(spark, path, ["k"], n_buckets=n_buckets)
+
+    model = {}
+    for bid, k in enumerate(keys[:8], start=1):
+        sink(spark.createDataFrame([(k, bid, f"v{bid}")], "k long, seq long, v string"), bid)
+        model[k] = (bid, f"v{bid}")
+    assert store().gen_count() == store().max_generations == 8
+    # batch 9: an update of the first key and a key in a fresh bucket
+    rows = [(keys[0], 9, "updated"), (keys[8], 9, "new")]
+    sink(spark.createDataFrame(rows, "k long, seq long, v string"), 9)
+    model.update({k: (seq, v) for k, seq, v in rows})
+    final = store()
+    assert final.gen_count() == 1
+    assert len(final._current_manifest()["buckets"]) == n_buckets
+    got = {r["k"]: (r["seq"], r["v"]) for r in sink.read(spark).collect()}
+    assert got == model

@@ -813,6 +813,22 @@ def test_run_compacted_aggregate_refuses_reserved_src_rank_column(spark, tmp_pat
         )
 
 
+def test_run_compacted_aggregate_refuses_reserved_row_seq_column(spark, tmp_path):
+    """The keyed merge it shares with ParquetUpsertSink drops
+    `_row_seq` after compacting, so a caller column of that name would
+    silently vanish from the state: refused like `_src_rank`."""
+    stream = spark.readStream.schema("id long, seq long, _row_seq long").json(str(tmp_path))
+    with pytest.raises(ValueError, match="_row_seq"):
+        run_compacted_aggregate(
+            stream,
+            state_dir=str(tmp_path / "state"),
+            key_cols=["id"],
+            seq_cols=["seq"],
+            group_cols=["id"],
+            query_name="reserved_row_seq",
+        )
+
+
 def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
