@@ -607,7 +607,7 @@ COLORS_ROW_SCHEMA = StructType(
     [StructField("user_id", LongType()), StructField("favorite_color", StringType())]
 )
 
-#: oracle-side color derivation — mirror of synth_colors_stream's
+#: oracle-side color derivation — mirror of `_COLORS_ROW_SQL`'s
 #: column expression (floor(abs(value)) is exact on doubles, % on the
 #: non-negative result agrees across engines)
 _COLOR_SQL = (
@@ -617,7 +617,7 @@ _COLOR_SQL = (
 )
 
 #: Spark-side colors row payload, its color derived as `_COLOR_SQL`
-#: does; rendered by synth_colors_stream and cdc_two_table_join
+#: does; rendered by cdc_two_table_join
 _COLORS_ROW_SQL = (
     "named_struct('user_id', user_id, 'favorite_color', "
     "element_at(array('red', 'green', 'blue', 'yellow'), "
@@ -634,16 +634,6 @@ _FLAT_COLORS_SQL = f"""
            {_COLOR_SQL} AS favorite_color
     FROM events
 """
-
-
-def synth_colors_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Render `events` as Debezium envelopes for the reference's SECOND
-    table (user_favorite_colors) — same mutation history, the color
-    derived deterministically from the event value."""
-    ev = spread_scan(load_table(spark, sf_dir, "events"))
-    # favorite_color = deterministic pick from the event value; whole
-    # envelope rendered as SQL text (see `_envelope_sql`)
-    return ev.selectExpr(_envelope_sql(_COLORS_ROW_SQL, "user_favorite_colors") + " AS value")
 
 
 @register(
@@ -1769,17 +1759,18 @@ _TTL_ORACLE_SQL = f"""
 def cdc_ttl_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 optional event-time state TTL under the value hash (VERDICT
     r11 #4): the compacted-aggregate pipeline of `cdc_pipeline_streamed`
-    run through `TTLStateStore` (streaming/state_ttl.py) with a horizon
-    that (a) expires a known key mid-stream so its next marked update
-    resurrects as a fresh insert with a NULL-resolved carry, (b) keeps
+    run through the state store's event-time TTL
+    (streaming/statestore.py) with a horizon that (a) expires a known
+    key mid-stream so its next marked update resurrects as a fresh
+    insert with a NULL-resolved carry, (b) keeps
     a sibling key's state alive so the same-shaped update carries the
     prior value forward, and (c) ages idle keys out of the final
     aggregate entirely. The oracle replays the persisted-watermark rule
     batch by batch in DuckDB (wm_k = max committed event time; a row is
     invisible when ts < wm - horizon). Default-off semantics are
     untouched: ttl=None remains the reference's idle-state-retention-0
-    behavior (sql-client-conf.yaml:16-17), regression-pinned
-    byte-for-byte in tests/test_statestore.py."""
+    behavior (sql-client-conf.yaml:16-17), regression-pinned in
+    tests/test_statestore.py."""
     import os
     import shutil
     import tempfile
@@ -1859,7 +1850,7 @@ def cdc_ttl_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate and share one oracle (`_TTL_ORACLE_SQL`). Previously
     this was pytest-pinned only (tests/test_statestore.py); the
     restart mechanics mirror tests/test_restart.py:62 over
-    streaming/state_ttl.py + streaming/compaction.py."""
+    streaming/statestore.py + streaming/compaction.py."""
     import os
     import shutil
     import tempfile

@@ -4,8 +4,9 @@ The reference builds a ``StreamExecutionEnvironment``
 (StreamingJobWithCustomDeserializer.java:44); our analog is a
 SparkSession with scale-oriented defaults: AQE (runtime re-planning +
 skew-join handling), UTC session time, Arrow for any pandas exchange,
-and the parquet timestamp switches that undeclared reads (state store,
-bus spool) rely on.
+and the parquet timestamp switches that undeclared reads (the bus
+spool) rely on; the state store reads with the schema its manifest
+records.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ from pyspark.sql import SparkSession
 RUNTIME_CONFS: dict[str, str] = {
     # Spark has no ns timestamp type and rejects parquet TIMESTAMP(NANOS)
     # by default; read such columns as long instead. The testdata is
-    # µs and io.load_table declares its schemas, so only undeclared
-    # reads (state store, spool) can meet this.
+    # µs, and io.load_table and the state store declare their schemas,
+    # so only undeclared reads (the bus spool) can meet this.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Naive (no-UTC-flag) parquet timestamps read as TIMESTAMP (LTZ)
     # rather than TIMESTAMP_NTZ: under the UTC session timezone this is

@@ -1,5 +1,4 @@
-"""Message-bus sinks (K1/K2): keyed-JSON topic writes and the console
-debug sink.
+"""Message-bus sink projection (K1/K2): keyed-JSON topic writes.
 
 Reference parity: the Pulsar sink serializes each typed event to JSON,
 sets the message key to the event's upsert key bytes, and writes one
@@ -39,36 +38,3 @@ def to_keyed_json(
         cols.append(F.lit(topic).alias("topic"))
     return df.select(*cols)
 
-
-def write_stream_to_kafka(
-    df: DataFrame,
-    bootstrap_servers: str,
-    checkpoint_dir: str,
-    topic: str | None = None,
-    query_name: str = "bus_sink",
-):
-    """Start an at-least-once keyed write to a Kafka-API bus (needs the
-    spark-sql-kafka package on the cluster; the wire projection itself
-    is covered by tests without a broker)."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-    )
-    if topic is not None:
-        writer = writer.option("topic", topic)
-    return writer.start()
-
-
-def write_stream_to_console(df: DataFrame, query_name: str = "console_sink", num_rows: int = 20):
-    """K1 console/print sink (StreamingJob.java:80-81). Ordering within
-    a partition is preserved; the reference pins parallelism 1 for
-    global order — per-key order via key partitioning is the scalable
-    equivalent."""
-    return (
-        df.writeStream.format("console")
-        .option("numRows", num_rows)
-        .queryName(query_name)
-        .start()
-    )

@@ -1,5 +1,5 @@
 """File-based CDC source: a directory of Debezium-format JSON lines
-consumed as a stream (or batch).
+consumed as a stream.
 
 This is the engine's dev/test path for the reference's CDC topology —
 identical envelope to the Postgres source (S1), so everything
@@ -25,8 +25,3 @@ def read_cdc_file_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path).select(F.col("value"))
 
-
-def read_cdc_file_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Batch twin of ``read_cdc_file_stream`` (stream-batch parity
-    testing)."""
-    return spark.read.format("text").load(path).select(F.col("value"))

@@ -3,16 +3,17 @@
 
 ``run_compacted_aggregate`` — ``foreachBatch``, exactly-once with a
 checkpoint location: merge each micro-batch into a compacted state
-table (bucketed generational parquet, :mod:`.statestore`), recompute
-the grouped aggregate, and hand the refreshed aggregate to a sink
-callback (our JDBC-upsert path, K3). A micro-batch rewrites only the
+table (bucketed generational parquet, :mod:`.statestore`, the one
+state store), recompute the grouped aggregate, and hand the refreshed
+aggregate to a sink callback (our JDBC-upsert path, K3). A micro-batch rewrites only the
 key-hash buckets it touches and publishes via an atomic manifest flip
 — per-batch write I/O is O(touched keys' buckets), not O(total
 state), and a crash mid-write leaves the previous state generation
 intact. State is partitioned by the upsert key — the same hash the
 reference's ``keyBy`` (StreamingJobWithCustomDeserializer.java:83)
-implies — and never expires unless a TTL is opted into, matching the
-reference's idle-state-retention-0 config (sql-client-conf.yaml:16-17).
+implies — and never expires unless the store's event-time TTL is opted
+into, matching the reference's idle-state-retention-0 config
+(sql-client-conf.yaml:16-17).
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog imp
     compact_latest,
     resolve_unavailable,
 )
-from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
 from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
     BUCKET_COL,
     GenerationalStateStore,
@@ -189,8 +189,8 @@ def run_compacted_aggregate(
 
     ``ttl_col``/``ttl`` (both None by default = the reference's
     idle-state-retention-0 semantics, sql-client-conf.yaml:16-17)
-    opt the state into an event-time horizon via
-    :class:`~.state_ttl.TTLStateStore`: a key whose stored row's
+    are handed to the :class:`~.statestore.GenerationalStateStore` and
+    opt the state into its event-time horizon: a key whose stored row's
     ``ttl_col`` falls more than ``ttl`` behind the store's persisted
     watermark becomes invisible to the merge and the aggregate — a
     later change for it lands as a fresh insert (and a marked TOAST
@@ -199,10 +199,7 @@ def run_compacted_aggregate(
     time, never a wall clock.
     """
     reject_internal_columns(stream.columns, "run_compacted_aggregate")
-    # TTLStateStore with ttl=None is behavior-identical to the base
-    # store (regression-tested byte-for-byte), so the default path is
-    # unchanged reference semantics.
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         stream.sparkSession,
         os.path.join(state_dir, "state"),
         key_cols,

@@ -25,11 +25,33 @@ StreamingJobWithCustomDeserializer.java:183-194, made 100-TB-viable):
    manifest. The previous manifest is retained one extra commit as a
    fallback generation.
 
+**Opt-in event-time TTL.** The reference runs with idle state retention
+0 — state never expires (sql-client-conf.yaml:16-17) — and that is the
+default (``ttl_col``/``ttl`` both None; no ``_ttl.json`` is written). A
+continuous crawl that keys state by document / user / session
+accumulates keys forever, so a store may opt into an event-time horizon
+instead of a wall clock:
+
+- The store persists a WATERMARK in ``_ttl.json``: the max ``ttl_col``
+  ever committed (monotone, advanced at each commit from the generation
+  just written, so a foreachBatch retry is idempotent). No ``now()`` is
+  consulted: replaying the same batches yields the same expiry
+  decisions on any host.
+- A row is EXPIRED when ``ttl_col < watermark - ttl``. Expired rows are
+  invisible to :meth:`GenerationalStateStore.read` at once and
+  physically dropped from a bucket the next time a commit rewrites it
+  (lazy, LSM-style: expiry I/O stays O(touched buckets)).
+- A key whose state expired and later receives a change has no prior
+  state at merge time, so the change lands as a fresh insert.
+
 All filesystem access goes through the Hadoop FileSystem API of the
 active session (never ``os.path``), so the store works unchanged on
 HDFS/S3A/local paths. Every generation is written by
 :func:`write_buckets` and read by :func:`read_generation` with the
 schema the manifest records, so a read runs no footer-inference job.
+Every manifest is published by :func:`publish_manifest` and loaded by
+:func:`load_manifest`, which refuses one that lacks a key of
+:data:`MANIFEST_KEYS`.
 
 Generation buildup is bounded: when a manifest would reference more
 than ``max_generations`` distinct directories, the next commit is
@@ -60,19 +82,15 @@ def write_buckets(df: DataFrame, path: str, mode: str) -> None:
     df.repartition(BUCKET_COL).write.mode(mode).partitionBy(BUCKET_COL).parquet(path)
 
 
-def recorded_schema(manifest: dict) -> StructType | None:
-    """The committed schema a manifest records; None for a manifest
-    that predates schema recording."""
-    schema_json = manifest.get("schema")
-    return None if schema_json is None else StructType.fromJson(json.loads(schema_json))
+def recorded_schema(manifest: dict) -> StructType:
+    """The committed schema a manifest records."""
+    return StructType.fromJson(json.loads(manifest["schema"]))
 
 
-def read_generation(spark: SparkSession, path: str, schema: StructType | None) -> DataFrame:
-    """The one generation read: with the recorded schema it fires no
-    schema-inference job; without one (a manifest that predates schema
-    recording) Spark infers it from the parquet footers."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+def read_generation(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """The one generation read, with the schema the manifest records,
+    so it fires no schema-inference job."""
+    return spark.read.schema(schema).parquet(path)
 
 
 class _Fs:
@@ -93,9 +111,6 @@ class _Fs:
 
     def exists(self, p) -> bool:
         return self.fs.exists(p)
-
-    def mkdirs(self, p) -> None:
-        self.fs.mkdirs(p)
 
     def list_names(self, p) -> list[str]:
         if not self.fs.exists(p):
@@ -124,13 +139,62 @@ class _Fs:
         self.fs.delete(p, True)
 
 
+#: the keys every manifest records; :func:`load_manifest` refuses a
+#: manifest lacking any of them
+MANIFEST_KEYS = ("n_buckets", "bucket_cols", "buckets", "schema")
+
+
+def load_manifest(io: _Fs, name: str) -> dict:
+    """Read the manifest ``name`` under ``io``'s root. One lacking a key
+    of :data:`MANIFEST_KEYS` was not written by :func:`publish_manifest`
+    and is refused: guessing its layout or inferring its schema could
+    silently read the wrong buckets or types."""
+    path = io.path(name)
+    manifest = json.loads(io.read_text(path))
+    missing = [k for k in MANIFEST_KEYS if manifest.get(k) is None]
+    if missing:
+        raise ValueError(
+            f"state store manifest {path.toString()} lacks {missing}; every "
+            f"manifest records {list(MANIFEST_KEYS)}"
+        )
+    return manifest
+
+
+def publish_manifest(
+    io: _Fs,
+    version: int,
+    n_buckets: int,
+    bucket_cols: list[str],
+    buckets: dict[str, str | None],
+    schema_json: str,
+) -> None:
+    """The one manifest writer (commit, savepoint, restore): publish
+    ``manifest-<version>.json`` under ``io``'s root by an atomic
+    rename."""
+    manifest = {
+        "n_buckets": n_buckets,
+        "bucket_cols": bucket_cols,
+        "buckets": buckets,
+        # committed schema: lets an all-empty store read back as a
+        # typed zero-row table (see GenerationalStateStore.read)
+        "schema": schema_json,
+    }
+    io.write_text_atomic(
+        io.path(f"manifest-{version}.json.tmp"),
+        io.path(f"manifest-{version}.json"),
+        json.dumps(manifest),
+    )
+
+
 class GenerationalStateStore:
     """Bucketed parquet state with atomically-published manifests.
 
     Layout under ``root``::
 
         gen-<v>/_bucket=<b>/*.parquet   rows of bucket b as of commit v
-        manifest-<v>.json               {"n_buckets": N, "buckets": {"b": "gen-x", ...}}
+        manifest-<v>.json               {"n_buckets": N, "bucket_cols": [...],
+                                         "buckets": {"b": "gen-x", ...}, "schema": ...}
+        _ttl.json                       {"watermark": W}, only under a TTL
 
     A bucket mapped to JSON ``null`` is the EMPTY-BUCKET MARKER: the
     bucket was explicitly committed with zero rows (every key deleted —
@@ -143,6 +207,10 @@ class GenerationalStateStore:
     records "known empty" instead, reads skip it, and the manifest
     additionally stores the committed SCHEMA so an all-empty store
     still reads back as a typed zero-row table rather than crashing.
+
+    ``ttl_col`` names an event-time column every state row carries (the
+    changelog's ``ts_ms`` is the natural choice) and ``ttl`` is the
+    horizon in the same units; see the module docstring.
     """
 
     def __init__(
@@ -153,7 +221,13 @@ class GenerationalStateStore:
         n_buckets: int = 64,
         max_generations: int = 8,
         bucket_cols: list[str] | None = None,
+        ttl_col: str | None = None,
+        ttl: int | None = None,
     ):
+        if (ttl is None) != (ttl_col is None):
+            raise ValueError("ttl and ttl_col must be given together (or neither)")
+        if ttl is not None and ttl < 0:
+            raise ValueError(f"ttl must be non-negative, got {ttl}")
         self.spark = spark
         self.root = root
         self.key_cols = key_cols
@@ -164,20 +238,17 @@ class GenerationalStateStore:
         self.bucket_cols = bucket_cols or key_cols
         self.n_buckets = n_buckets
         self.max_generations = max_generations
+        self.ttl_col = ttl_col
+        self.ttl = ttl
         self._io = _Fs(spark, root)
         current = self._current_manifest()
-        if current is not None and current.get("n_buckets") != n_buckets:
-            # bucket count is part of the on-disk layout; honor what's stored
-            self.n_buckets = int(current["n_buckets"])
-        # bucket assignment is ALSO part of the layout: a store created
-        # with prefix bucketing must keep it when reopened/restored, or
-        # new commits would scatter an entity's rows across buckets.
-        # A manifest WITHOUT bucket_cols (legacy store, or a restore
-        # of one) could only have been written by full-key bucketing,
-        # so the fallback is key_cols — honoring a constructor-passed
-        # prefix here would make pruned reads look in the wrong buckets
         if current is not None:
-            self.bucket_cols = list(current.get("bucket_cols") or key_cols)
+            # bucket count and bucket assignment are part of the on-disk
+            # layout; honor what's stored: a store created with prefix
+            # bucketing must keep it when reopened/restored, or new
+            # commits would scatter an entity's rows across buckets
+            self.n_buckets = int(current["n_buckets"])
+            self.bucket_cols = list(current["bucket_cols"])
 
     # -- manifest bookkeeping -------------------------------------------------
 
@@ -195,7 +266,13 @@ class GenerationalStateStore:
         versions = self._manifest_versions()
         if not versions:
             return None
-        return json.loads(self._io.read_text(self._io.path(f"manifest-{versions[-1]}.json")))
+        return load_manifest(self._io, f"manifest-{versions[-1]}.json")
+
+    def _watermark(self) -> int | None:
+        p = self._io.path("_ttl.json")
+        if not self._io.exists(p):
+            return None
+        return json.loads(self._io.read_text(p)).get("watermark")
 
     # -- reads ----------------------------------------------------------------
 
@@ -204,9 +281,10 @@ class GenerationalStateStore:
 
     def read(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Current state rows (with the bucket column), optionally
-        restricted to the given bucket ids. Groups buckets by owning
-        generation so each directory is scanned once, with partition
-        pruning on ``_bucket=``."""
+        restricted to the given bucket ids, without the rows a TTL has
+        expired; None only when nothing was ever committed. Groups
+        buckets by owning generation so each directory is scanned once,
+        with partition pruning on ``_bucket=``."""
         manifest = self._current_manifest()
         if manifest is None:
             return None
@@ -230,14 +308,19 @@ class GenerationalStateStore:
         if not parts:
             # committed-but-empty state (every selected bucket carries
             # the empty marker, or none is owned): a typed zero-row
-            # table from the manifest's committed schema. None only for
-            # a legacy manifest that predates schema recording — the
-            # old "nothing to read" contract.
-            return None if schema is None else self.spark.createDataFrame([], schema)
-        out = parts[0]
+            # table from the manifest's committed schema
+            parts = [self.spark.createDataFrame([], schema)]
+        state = parts[0]
         for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            state = state.unionByName(p)
+        wm = None if self.ttl is None else self._watermark()
+        if wm is None:
+            return state
+        # NULL event times never expire (a row without one gives the
+        # horizon nothing to compare against — keep, don't guess)
+        return state.filter(
+            F.col(self.ttl_col).isNull() | (F.col(self.ttl_col) >= F.lit(wm - self.ttl))
+        )
 
     # -- commits --------------------------------------------------------------
 
@@ -273,6 +356,17 @@ class GenerationalStateStore:
                         f"key columns."
                     ) from None
         return out
+
+    def _owners(self, io: _Fs, gen: str, buckets) -> dict[str, str | None]:
+        """Manifest entries for ``buckets`` after ``gen`` was written
+        (commit and savepoint share the rule). partitionBy only creates
+        a ``_bucket=<b>`` directory for buckets that received rows; a
+        bucket with NO directory was committed empty (every key deleted
+        / expired) and gets the null marker — never a directory that
+        has no parquet footers for it (an ALL-empty generation has no
+        footers at all and would crash every later read)."""
+        present = self._present_buckets(io, gen)
+        return {str(b): (gen if b in present else None) for b in buckets}
 
     @staticmethod
     def _schema_fingerprint(schema: StructType) -> dict[str, str]:
@@ -316,14 +410,24 @@ class GenerationalStateStore:
         :meth:`_schema_fingerprint`): the manifest records only the
         latest commit's schema, and typed-empty reads are served from
         it. Drift is validated BEFORE any write and fails loudly.
-        A legacy manifest that predates schema recording (pre-r15) has
-        nothing to validate against; the first commit on such a store
-        backfills the ``schema`` key, making the typed-empty read
-        contract universal from then on."""
+
+        Under a TTL the generation is written UNFILTERED, then the
+        watermark advances (:meth:`_advance_watermark`). Expired rows
+        still leave a bucket at its next rewrite: the merge that
+        produced ``df`` read prior state through the expiry-filtered
+        :meth:`read`. Filtering ``df`` too would only drop rows that
+        ARRIVE already expired — and when every row of the touched
+        buckets is such a straggler the generation comes out physically
+        EMPTY and every later read of its buckets fails. Stragglers are
+        invisible to :meth:`read` anyway (the watermark is monotone) and
+        are purged at their bucket's next rewrite or the next full
+        compaction: a bounded space cost, never a correctness one."""
         manifest = self._current_manifest()
-        prev_schema = recorded_schema(manifest or {})
-        if prev_schema is not None:
-            prev_fp = self._schema_fingerprint(prev_schema)
+        # read once per commit: the store is single-writer and only
+        # commit advances the watermark
+        wm = None if self.ttl is None else self._watermark()
+        if manifest is not None:
+            prev_fp = self._schema_fingerprint(recorded_schema(manifest))
             new_fp = self._schema_fingerprint(df.schema)
             if new_fp != prev_fp:
                 added = sorted(set(new_fp) - set(prev_fp))
@@ -351,32 +455,51 @@ class GenerationalStateStore:
             attempt += 1
             gen = f"gen-{version}-r{attempt}"
         write_buckets(df, f"{self.root}/{gen}", "overwrite")
-        # Empty-bucket markers: partitionBy only creates a _bucket=<b>
-        # directory for buckets that received rows. A touched bucket
-        # with NO directory was committed empty (every key deleted /
-        # expired) — point it at null, never at a directory that has no
-        # parquet footers for it (an ALL-empty generation has no
-        # footers at all and would crash every later read).
-        present = self._present_buckets(self._io, gen)
-        if manifest is None:
-            manifest = {"n_buckets": self.n_buckets, "buckets": {}}
-        buckets = dict(manifest["buckets"])
-        for b in touched_buckets:
-            buckets[str(b)] = gen if b in present else None
-        new_manifest = {
-            "n_buckets": self.n_buckets,
-            "bucket_cols": self.bucket_cols,
-            "buckets": buckets,
-            # committed schema: lets an all-empty store read back as a
-            # typed zero-row table (see read)
-            "schema": df.schema.json(),
-        }
-        self._io.write_text_atomic(
-            self._io.path(f"manifest-{version}.json.tmp"),
-            self._io.path(f"manifest-{version}.json"),
-            json.dumps(new_manifest),
+        buckets = {} if manifest is None else dict(manifest["buckets"])
+        buckets.update(self._owners(self._io, gen, touched_buckets))
+        publish_manifest(
+            self._io, version, self.n_buckets, self.bucket_cols, buckets, df.schema.json()
         )
         self._gc(keep_manifests=2)
+        if self.ttl is not None:
+            self._advance_watermark(touched_buckets, wm)
+
+    def _advance_watermark(self, touched_buckets: list[int], prev: int | None) -> None:
+        """Advance ``_ttl.json`` to the max ``ttl_col`` of the generation
+        just committed — a bounded columnar max, not a second evaluation
+        of the (lazy) merge plan. ``prev`` is the watermark read at the
+        start of the commit."""
+        manifest = self._current_manifest()
+        # Empty-bucket markers contribute no event times: nothing was
+        # physically written for those buckets. An ALL-empty commit
+        # (every touched bucket marked) wrote a footerless generation —
+        # skip the read-back (no rows, no watermark candidate).
+        gens = {manifest["buckets"][str(b)] for b in touched_buckets} - {None}
+        if not gens:
+            return
+        if len(gens) != 1:
+            # Single-generation invariant: commit just re-pointed EVERY
+            # touched bucket at the one generation it wrote, and that
+            # directory holds only the touched buckets' rows, so the
+            # read-back is one scan of one directory. An explicit raise,
+            # not `assert`: under `python -O` a stripped assert would let
+            # gens.pop() read one arbitrary generation and silently
+            # under-advance the watermark (delayed expiry).
+            raise RuntimeError(
+                f"touched buckets span generations immediately after commit: {sorted(gens)}"
+            )
+        row = (
+            read_generation(self.spark, f"{self.root}/{gens.pop()}", recorded_schema(manifest))
+            .agg(F.max(self.ttl_col))
+            .collect()[0]
+        )
+        if row[0] is None or (prev is not None and prev >= row[0]):
+            return  # monotone; also makes commit replay idempotent
+        self._io.write_text_atomic(
+            self._io.path("_ttl.json.tmp"),
+            self._io.path("_ttl.json"),
+            json.dumps({"watermark": int(row[0])}),
+        )
 
     # -- savepoints -----------------------------------------------------------
 
@@ -422,22 +545,12 @@ class GenerationalStateStore:
         # errorifexists error.
         write_buckets(state, f"{path}/gen-0", "errorifexists")
         try:
-            # same empty-bucket contract as commit: buckets with no rows at
-            # snapshot time (including the whole-store-empty case, whose
-            # gen-0 has no parquet footers) get the null marker, so the
-            # savepoint stays readable and restorable
-            present = self._present_buckets(io, "gen-0")
-            manifest = {
-                "n_buckets": self.n_buckets,
-                "bucket_cols": self.bucket_cols,
-                "buckets": {
-                    str(b): ("gen-0" if b in present else None)
-                    for b in range(self.n_buckets)
-                },
-                "schema": state.schema.json(),
-            }
-            io.write_text_atomic(
-                io.path("manifest-0.json.tmp"), io.path("manifest-0.json"), json.dumps(manifest)
+            # buckets with no rows at snapshot time (including the
+            # whole-store-empty case, whose gen-0 has no parquet footers)
+            # get the null marker, so the savepoint stays restorable
+            buckets = self._owners(io, "gen-0", range(self.n_buckets))
+            publish_manifest(
+                io, 0, self.n_buckets, self.bucket_cols, buckets, state.schema.json()
             )
         except BaseException:
             # A gen-0 whose manifest never publishes would otherwise be
@@ -470,9 +583,11 @@ class GenerationalStateStore:
         savepoint itself (it stays a valid restore point for other
         incarnations, exactly how Flink jobs re-launch from a
         savepoint). The bucket count comes from the savepoint's
-        manifest; the copy is one distributed read→write."""
+        manifest; the copy is one distributed read→write. A restored
+        store starts without a TTL watermark: reopen it with
+        ``ttl_col``/``ttl`` and its first commit advances one."""
         src = _Fs(spark, savepoint_path)
-        manifest = json.loads(src.read_text(src.path("manifest-0.json")))
+        manifest = load_manifest(src, "manifest-0.json")
         n_buckets = int(manifest["n_buckets"])
         dst = _Fs(spark, root)
         if dst.exists(dst.path("manifest-0.json")):
@@ -486,21 +601,8 @@ class GenerationalStateStore:
                 f"{root}/gen-0",
                 "errorifexists",
             )
-        new_manifest = {
-            "n_buckets": n_buckets,
-            # record the source store's EFFECTIVE layout: a
-            # legacy savepoint without bucket_cols was written
-            # with full-key bucketing, so persist key_cols
-            # rather than propagating the null
-            "bucket_cols": list(manifest.get("bucket_cols") or key_cols),
-            "buckets": dict(manifest["buckets"]),
-        }
-        if manifest.get("schema") is not None:
-            new_manifest["schema"] = manifest["schema"]
-        dst.write_text_atomic(
-            dst.path("manifest-0.json.tmp"),
-            dst.path("manifest-0.json"),
-            json.dumps(new_manifest),
+        publish_manifest(
+            dst, 0, n_buckets, manifest["bucket_cols"], manifest["buckets"], manifest["schema"]
         )
         return cls(spark, root, key_cols, n_buckets=n_buckets, max_generations=max_generations)
 
@@ -513,7 +615,7 @@ class GenerationalStateStore:
         keep = versions[-keep_manifests:]
         live_gens = set()
         for v in keep:
-            m = json.loads(self._io.read_text(self._io.path(f"manifest-{v}.json")))
+            m = load_manifest(self._io, f"manifest-{v}.json")
             live_gens.update(g for g in m["buckets"].values() if g is not None)
         for name in self._io.list_names(self._io.path()):
             if name.startswith("manifest-") and name.endswith(".json"):

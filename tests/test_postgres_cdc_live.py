@@ -1582,7 +1582,7 @@ def test_streaming_engine_event_time_ttl_live(scratch, spark):
     (VERDICT r11 #4's production shape): the registered postgres_cdc
     DataSource tails a scratch table through pgoutput while
     run_compacted_aggregate(ttl_col=, ttl=) maintains the aggregate
-    over a TTLStateStore. The horizon rides a DATA column (ets), so
+    over a TTL store. The horizon rides a DATA column (ets), so
     expiry is deterministic despite real wall-clock WAL timestamps:
     keys age out of the live aggregate as the watermark passes them,
     and a change to an expired key lands as a fresh insert."""
@@ -1687,7 +1687,7 @@ def test_streaming_engine_ttl_restart_live(scratch, spark):
     from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.envelope import parse_cdc, project_flat
     from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.postgres_cdc import register
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import run_compacted_aggregate
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
     import pyspark.sql.functions as F
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -1764,7 +1764,7 @@ def test_streaming_engine_ttl_restart_live(scratch, spark):
     finally:
         q.stop()
     # persisted watermark survives the kill
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, f"{work}/state/state", ["id"], n_buckets=4, ttl_col="ets", ttl=100
     )
     assert store._watermark() == 300
@@ -1937,7 +1937,7 @@ def test_two_stage_topologies_kill_resume_live(scratch, spark):
     )
     from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.postgres_cdc import register
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import run_compacted_aggregate
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
 
     _setup_plugin(scratch, "pgoutput")
     cur = scratch["cur"]
@@ -2057,7 +2057,7 @@ def test_two_stage_topologies_kill_resume_live(scratch, spark):
         # the resumed pipeline advances the watermark to 300 through
         # the bus hop: keys 1/2 age out, only key 3 lives
         assert got["last"] == {("all", 1)}
-        store = TTLStateStore(
+        store = GenerationalStateStore(
             spark, f"{work}/state/state", ["key"], n_buckets=4,
             ttl_col="ets", ttl=100,
         )
@@ -2302,7 +2302,6 @@ def test_streaming_engine_savepoint_restore_live(scratch, spark):
     from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.envelope import parse_cdc, project_flat
     from experiment_flink_cdc_connectors_postgres_datastream_spark.sources.postgres_cdc import register
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compaction import run_compacted_aggregate
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
 
     _setup_plugin(scratch, "pgoutput")
@@ -2382,7 +2381,7 @@ def test_streaming_engine_savepoint_restore_live(scratch, spark):
         q.stop()
 
     # --- savepoint the killed incarnation's store ---
-    store_a = TTLStateStore(
+    store_a = GenerationalStateStore(
         spark, f"{work1}/state/state", ["id"], n_buckets=4, ttl_col="ets", ttl=100
     )
     store_a.savepoint(sp)
@@ -2408,7 +2407,7 @@ def test_streaming_engine_savepoint_restore_live(scratch, spark):
     GenerationalStateStore.restore_from_savepoint(
         spark, sp, f"{work2}/state/state", ["id"]
     )
-    store_b = TTLStateStore(
+    store_b = GenerationalStateStore(
         spark, f"{work2}/state/state", ["id"], n_buckets=4, ttl_col="ets", ttl=100
     )
     assert store_b._watermark() is None  # watermark is NOT part of a savepoint

@@ -7,6 +7,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
     BUCKET_COL,
@@ -198,62 +199,45 @@ def test_bucket_cols_read_back_from_manifest(spark, tmp_path):
     assert [r[0] for r in df2.select(BUCKET_COL).distinct().collect()] == touched
 
 
-def test_legacy_manifest_without_bucket_cols_falls_back_to_key_cols(spark, tmp_path):
-    """A manifest that predates bucket_cols (or a restore that wrote
-    null) could only have been produced by full-key bucketing —
-    reopening such a store with a PREFIX bucket_cols argument must
-    ignore the argument, or pruned reads would look in the wrong
-    buckets and silently miss rows."""
-    store = GenerationalStateStore(spark, str(tmp_path / "state"), ["k", "seq"], n_buckets=4)
-    df = store.with_bucket(
-        spark.createDataFrame([(1, 10, "a"), (2, 20, "b")], "k long, seq long, v string")
-    )
-    touched = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
-    store.commit(df, touched, version=0)
-
-    # simulate the legacy layout: strip bucket_cols from the manifest
-    root = str(tmp_path / "state")
-    names = sorted(n for n in os.listdir(root) if n.startswith("manifest-"))
-    path = os.path.join(root, names[-1])
+def _strip_manifest_key(root, name, key):
+    """Rewrite manifest ``name`` under ``root`` without ``key``; the
+    hadoop local-fs checksum sidecar would no longer match, so it goes."""
+    path = os.path.join(root, name)
     manifest = json.loads(open(path).read())
-    manifest.pop("bucket_cols", None)
+    manifest.pop(key)
     open(path, "w").write(json.dumps(manifest))
-    crc = os.path.join(root, f".{names[-1]}.crc")
-    if os.path.exists(crc):  # hadoop local-fs checksum sidecar
+    crc = os.path.join(root, f".{name}.crc")
+    if os.path.exists(crc):
         os.remove(crc)
 
-    reopened = GenerationalStateStore(
-        spark, root, ["k", "seq"], n_buckets=4, bucket_cols=["k"]
-    )
-    assert reopened.bucket_cols == ["k", "seq"]
-    # pruned read by the full-key bucketing still finds every row
-    got = {(r["k"], r["v"]) for r in reopened.read(buckets=touched).collect()}
-    assert got == {(1, "a"), (2, "b")}
+
+@pytest.mark.parametrize("key", ["schema", "bucket_cols"])
+def test_reopen_refuses_manifest_missing_a_key(spark, tmp_path, key):
+    """Every manifest the store writes records n_buckets, bucket_cols,
+    buckets and schema. Reopening a store whose latest manifest lacks
+    one fails loudly, naming the file and the key, rather than guessing
+    a layout (full-key bucketing) or inferring a schema from footers."""
+    store = _mk(spark, tmp_path, n_buckets=4)
+    _commit_rows(spark, store, [(1, "a"), (2, "b")], version=0)
+    _strip_manifest_key(str(tmp_path / "state"), "manifest-0.json", key)
+    with pytest.raises(ValueError, match=rf"manifest-0\.json lacks \['{key}'\]"):
+        _mk(spark, tmp_path, n_buckets=4)
 
 
-def test_restore_records_effective_bucket_cols(spark, tmp_path):
-    """restore() must persist the source store's EFFECTIVE layout:
-    restoring a legacy savepoint (bucket_cols null) writes key_cols,
-    never propagates the null."""
-    store = GenerationalStateStore(spark, str(tmp_path / "state"), ["k"], n_buckets=4)
-    df = store.with_bucket(spark.createDataFrame([(1, "a")], "k long, v string"))
-    touched = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
-    store.commit(df, touched, version=0)
+def test_restore_refuses_savepoint_manifest_without_bucket_cols(spark, tmp_path):
+    """restore_from_savepoint loads the savepoint's manifest through the
+    same check: one without bucket_cols is refused before anything is
+    copied, instead of being restored as full-key bucketing."""
+    store = _mk(spark, tmp_path, n_buckets=4)
+    _commit_rows(spark, store, [(1, "a")], version=0)
     sp = str(tmp_path / "sp")
     store.savepoint(sp)
-    manifest = json.loads(open(os.path.join(sp, "manifest-0.json")).read())
-    manifest.pop("bucket_cols", None)
-    open(os.path.join(sp, "manifest-0.json"), "w").write(json.dumps(manifest))
-    crc = os.path.join(sp, ".manifest-0.json.crc")
-    if os.path.exists(crc):  # hadoop local-fs checksum sidecar
-        os.remove(crc)
-
-    restored = GenerationalStateStore.restore_from_savepoint(
-        spark, sp, str(tmp_path / "state2"), ["k"]
-    )
-    assert restored.bucket_cols == ["k"]
-    written = json.loads(open(os.path.join(str(tmp_path / "state2"), "manifest-0.json")).read())
-    assert written["bucket_cols"] == ["k"]
+    _strip_manifest_key(sp, "manifest-0.json", "bucket_cols")
+    with pytest.raises(ValueError, match=r"manifest-0\.json lacks \['bucket_cols'\]"):
+        GenerationalStateStore.restore_from_savepoint(
+            spark, sp, str(tmp_path / "state2"), ["k"]
+        )
+    assert not (tmp_path / "state2").exists()
 
 
 # ---------------------------------------------------------------- TTL knob
@@ -279,33 +263,24 @@ def _ttl_commit(spark, store, rows, version):
 
 
 def test_ttl_none_behaves_exactly_like_base_store(spark, tmp_path):
-    """VERDICT r10 #8 regression: the default (ttl=None) preserves the
-    reference's idle-state-retention-0 semantics byte-identically —
-    same visible rows, same manifest sequence, and no _ttl.json ever
-    written to the store root."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    base = GenerationalStateStore(spark, str(tmp_path / "base"), ["k"], n_buckets=4)
-    ttl0 = TTLStateStore(spark, str(tmp_path / "ttl0"), ["k"], n_buckets=4)
+    """VERDICT r10 #8 regression: the default (ttl=None) keeps the
+    reference's idle-state-retention-0 semantics — a row whose event
+    time falls far behind the max stays visible, and no _ttl.json is
+    ever written to the store root. ttl without ttl_col is refused."""
+    store = GenerationalStateStore(spark, str(tmp_path / "base"), ["k"], n_buckets=4)
     steps = [
         ([(1, "a", 0), (2, "b", 50)], 0),
         ([(2, "b2", 200)], 1),
         ([(3, "c", 10)], 2),  # ts far behind the max: must stay visible
     ]
     for rows, v in steps:
-        _ttl_commit(spark, base, rows, v)
-        _ttl_commit(spark, ttl0, rows, v)
-    rows_base = {tuple(r) for r in base.read().drop(BUCKET_COL).collect()}
-    rows_ttl = {tuple(r) for r in ttl0.read().drop(BUCKET_COL).collect()}
-    assert rows_base == rows_ttl == {(1, "a", 0), (2, "b2", 200), (3, "c", 10)}
-    base_files = sorted(f for f in os.listdir(tmp_path / "base") if f.startswith("manifest"))
-    ttl_files = sorted(f for f in os.listdir(tmp_path / "ttl0") if f.startswith("manifest"))
-    assert base_files == ttl_files
-    assert not os.path.exists(tmp_path / "ttl0" / "_ttl.json")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="together"):
-        TTLStateStore(spark, str(tmp_path / "bad"), ["k"], ttl=100)
+        _ttl_commit(spark, store, rows, v)
+    rows = {tuple(r) for r in store.read().drop(BUCKET_COL).collect()}
+    assert rows == {(1, "a", 0), (2, "b2", 200), (3, "c", 10)}
+    assert store._watermark() is None
+    assert not os.path.exists(tmp_path / "base" / "_ttl.json")
+    with pytest.raises(ValueError, match="together"):
+        GenerationalStateStore(spark, str(tmp_path / "bad"), ["k"], ttl=100)
 
 
 def test_ttl_expires_hides_then_drops_and_resurrects(spark, tmp_path):
@@ -314,10 +289,8 @@ def test_ttl_expires_hides_then_drops_and_resurrects(spark, tmp_path):
     buckets), is physically dropped when its bucket is next rewritten,
     and a later change to that key lands as a fresh INSERT (the
     resurrect contract). The watermark survives a store reopen."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
     root = str(tmp_path / "state")
-    store = TTLStateStore(spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=100)
+    store = GenerationalStateStore(spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=100)
     _ttl_commit(spark, store, [(1, "a", 0), (2, "b", 50)], 0)
     # watermark 50: nothing older than -50, both visible
     assert {r["k"] for r in store.read().collect()} == {1, 2}
@@ -336,7 +309,7 @@ def test_ttl_expires_hides_then_drops_and_resurrects(spark, tmp_path):
     gen2 = spark.read.parquet(os.path.join(root, "gen-2"))
     assert [(r["k"], r["ts"]) for r in gen2.filter("k = 1").collect()] == [(1, 250)]
     # watermark persists across reopen; filtering still applies
-    reopened = TTLStateStore(spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=100)
+    reopened = GenerationalStateStore(spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=100)
     assert reopened._watermark() == 250
     assert {r["k"] for r in reopened.read().collect()} == {1, 2}
     # a NULL event time never expires
@@ -344,15 +317,47 @@ def test_ttl_expires_hides_then_drops_and_resurrects(spark, tmp_path):
     assert (4, "no-ts") in {(r["k"], r["v"]) for r in reopened.read().collect()}
 
 
+def test_ttl_savepoint_restore_starts_without_watermark(spark, tmp_path):
+    """Savepoint → restore under a TTL: the savepoint exports the
+    expiry-filtered state and carries no watermark, so the restored
+    root has no _ttl.json; reopened with ttl_col/ttl, its first commit
+    re-advances the watermark, and a key that expired before the
+    savepoint does not come back — a change to it lands as a fresh
+    insert."""
+    store = GenerationalStateStore(
+        spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=100
+    )
+    _ttl_commit(spark, store, [(1, "a", 0), (2, "b", 50)], 0)
+    _ttl_commit(spark, store, [(2, "b2", 200)], 1)  # watermark 200 expires key 1
+    assert store._watermark() == 200
+    sp = str(tmp_path / "sp")
+    store.savepoint(sp)
+
+    root = str(tmp_path / "restored")
+    GenerationalStateStore.restore_from_savepoint(spark, sp, root, ["k"])
+    restored = GenerationalStateStore(spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=100)
+    assert restored._watermark() is None
+    assert not os.path.exists(os.path.join(root, "_ttl.json"))
+    # no watermark yet filters nothing, and key 1 is still gone
+    assert {(r["k"], r["v"]) for r in restored.read().collect()} == {(2, "b2")}
+    key1 = restored.with_bucket(spark.createDataFrame([(1, "x", 0)], "k long, v string, ts long"))
+    b1 = key1.select(BUCKET_COL).first()[0]
+    assert restored.read(buckets=[b1]).filter("k = 1").count() == 0  # the merge's prior view
+
+    _ttl_commit(spark, restored, [(1, "reborn", 210)], 1)
+    assert restored._watermark() == 210
+    assert {(r["k"], r["v"], r["ts"]) for r in restored.read().collect()} == {
+        (1, "reborn", 210), (2, "b2", 200)
+    }
+
+
 def test_ttl_store_through_a_real_stream(spark, tmp_path):
     """The TTL knob composes with the engine: a foreachBatch merge
-    into a TTLStateStore across two mtime-ordered micro-batches —
+    into a TTL store across two mtime-ordered micro-batches —
     batch 2's watermark expires a key last updated in batch 1, and
     the expiry decision comes from COMMITTED state metadata, not
     intra-batch context."""
     import json as _json
-
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
 
     d = tmp_path / "ttl_src"
     d.mkdir()
@@ -371,7 +376,7 @@ def test_ttl_store_through_a_real_stream(spark, tmp_path):
     os.utime(d / "b1.json", (now - 60, now - 60))
     os.utime(d / "b2.json", (now, now))
 
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=100
     )
 
@@ -412,9 +417,7 @@ def test_ttl_savepoint_excludes_expired_rows(spark, tmp_path):
     keys do not ride into the snapshot, and a base-store restore of it
     (the knob is opt-in per store, not per layout) starts from exactly
     the live set."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=100
     )
     _ttl_commit(spark, store, [(1, "old", 0), (2, "new", 200)], 0)
@@ -437,9 +440,7 @@ def test_ttl_watermark_read_back_is_bucket_scoped_per_generation(spark, tmp_path
     generations' directories still physically hold for buckets they
     have since lost never feed the max, and multi-generation layouts
     keep producing the exact monotone watermark."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=10_000
     )
     _ttl_commit(spark, store, [(k, f"v{k}", 100 * k) for k in range(1, 9)], 0)
@@ -461,21 +462,19 @@ def test_ttl_commit_reads_watermark_exactly_once(spark, tmp_path):
     (it is read up-front and threaded through the expiry filter and
     the monotone advance) — the store is single-writer, so re-reads
     inside one commit were pure redundant tiny-file I/O."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=100
     )
     _ttl_commit(spark, store, [(1, "a", 0), (2, "b", 50)], 0)
 
     calls = {"n": 0}
-    orig = TTLStateStore._watermark
+    orig = GenerationalStateStore._watermark
 
     def counting(self):
         calls["n"] += 1
         return orig(self)
 
-    TTLStateStore._watermark = counting
+    GenerationalStateStore._watermark = counting
     try:
         df = store.with_bucket(
             spark.createDataFrame([(1, "a2", 120)], "k long, v string, ts long")
@@ -483,7 +482,7 @@ def test_ttl_commit_reads_watermark_exactly_once(spark, tmp_path):
         touched = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
         store.commit(df, touched, 1)
     finally:
-        TTLStateStore._watermark = orig
+        GenerationalStateStore._watermark = orig
     assert calls["n"] == 1
     assert store._watermark() == 120
 
@@ -492,7 +491,7 @@ def test_ttl_store_matches_pure_python_model_property(spark, tmp_path):
     """Cross-implementation property pin for event-time TTL: random
     event histories (keys × distinct event times, optional no-ts rows,
     late arrivals) split across random micro-batch boundaries, merged
-    through a TTLStateStore, must match a ~20-line pure-Python replay
+    through a TTL store, must match a ~20-line pure-Python replay
     of the contract: wm_k = max committed event time; state expired at
     a merge when ts < wm - ttl (it neither seeds the merge nor rides
     the rewrite); no-ts rows never expire; final visibility is
@@ -500,11 +499,9 @@ def test_ttl_store_matches_pure_python_model_property(spark, tmp_path):
     an all-late batch whose commit-time filter produced a physically
     EMPTY, schema-less generation that broke every later read — is
     why commits now write the batch unfiltered (see
-    TTLStateStore.commit) and is pinned separately below."""
+    GenerationalStateStore.commit) and is pinned separately below."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
 
     def model(batches, ttl):
         wm = None
@@ -574,7 +571,7 @@ def test_ttl_store_matches_pure_python_model_property(spark, tmp_path):
         batches = [b for b in batches if b]
         seq["n"] += 1
         root = str(tmp_path / f"m{seq['n']}")  # fresh store per example
-        store = TTLStateStore(
+        store = GenerationalStateStore(
             spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=ttl
         )
         for v, batch in enumerate(batches):
@@ -597,9 +594,7 @@ def test_ttl_all_late_batch_never_publishes_unreadable_generation(spark, tmp_pat
     prev-read, so the pipeline could never self-heal). Commits now
     write the batch unfiltered: the straggler stays invisible and is
     dropped on the bucket's next rewrite."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=2
     )
     _ttl_commit(spark, store, [(0, "v0:3", 3)], 0)  # watermark -> 3
@@ -633,8 +628,6 @@ def test_ttl_store_with_tombstones_matches_pure_python_model_property(spark, tmp
     visible view exactly at its horizon."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
 
     def commit_ops(store, rows, version):
         df = store.with_bucket(
@@ -715,7 +708,7 @@ def test_ttl_store_with_tombstones_matches_pure_python_model_property(spark, tmp
         batches = [b for b in batches if b]
         seq["n"] += 1
         root = str(tmp_path / f"d{seq['n']}")  # fresh store per example
-        store = TTLStateStore(
+        store = GenerationalStateStore(
             spark, root, ["k"], n_buckets=4, ttl_col="ts", ttl=ttl
         )
         for v, batch in enumerate(batches):
@@ -736,9 +729,7 @@ def test_ttl_commit_reads_back_exactly_one_generation(spark, tmp_path):
     just written — even on a store whose manifest spans several
     generations (the case the removed code dead-handled). Counted by
     intercepting the session's parquet reads during commit."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=10_000
     )
     # build a multi-generation layout: 8 keys across 4 buckets, then
@@ -852,16 +843,17 @@ def test_ttl_single_generation_invariant_is_loud_not_assert(spark, tmp_path):
     two generations."""
     import pytest
 
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=2, ttl_col="ts", ttl=100
     )
     df = store.with_bucket(spark.createDataFrame([(1, 10), (2, 20)], "k long, ts long"))
     touched = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
     store.commit(df, touched, version=0)  # a normal commit upholds it
     assert len(touched) == 2  # keys 1/2 hash to distinct buckets (pure fn)
-    store._current_manifest = lambda: {"buckets": {str(b): f"gen-{b}" for b in touched}}
+    committed = store._current_manifest()
+    store._current_manifest = lambda: {
+        **committed, "buckets": {str(b): f"gen-{b}" for b in touched}
+    }
     df2 = store.with_bucket(spark.createDataFrame([(1, 30), (2, 40)], "k long, ts long"))
     with pytest.raises(RuntimeError, match="span generations"):
         store.commit(df2, touched, version=1)
@@ -953,9 +945,7 @@ def test_ttl_all_empty_commit_skips_watermark_readback(spark, tmp_path):
     """TTL watermark read-back over an all-empty commit: every touched
     bucket carries the marker, so there is no generation to scan — the
     read-back must be skipped (no crash) and the watermark unchanged."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=5
     )
     _ttl_commit(spark, store, [(1, "v1", 10)], 0)
@@ -1265,9 +1255,7 @@ def test_ttl_max_committed_ts_row_is_always_visible(spark, tmp_path):
     all visible rows can only happen through explicit deletion (the
     empty-refresh marker path), never through aging alone. Pinned
     with ttl=0, the tightest horizon."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
-
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=0
     )
     _ttl_commit(spark, store, [(1, "a", 10)], 0)
@@ -1378,51 +1366,6 @@ def test_commit_tolerates_column_order_and_nullability_drift(spark, tmp_path):
     ).select("v", BUCKET_COL, "k")
     store.commit(again, [r[0] for r in again.select(BUCKET_COL).distinct().collect()], version=1)
     assert {(r["k"], r["v"]) for r in store.read().collect()} == {(1, "a"), (2, "b")}
-
-
-def test_legacy_manifest_schema_backfilled_on_first_commit(spark, tmp_path):
-    """VERDICT r15 #7: a pre-r15 manifest carries no `schema` key, so
-    its pruned empty reads return None (the legacy contract). The
-    FIRST commit on such a store must backfill the key — from then on
-    the typed-empty read contract is universal."""
-    store = _mk(spark, tmp_path, n_buckets=4)
-    _commit_rows(spark, store, [(1, "a"), (2, "b")], version=0)
-
-    # simulate the legacy layout: strip `schema` from the manifest
-    root = str(tmp_path / "state")
-    names = sorted(n for n in os.listdir(root) if n.startswith("manifest-") and n.endswith(".json"))
-    path = os.path.join(root, names[-1])
-    manifest = json.loads(open(path).read())
-    manifest.pop("schema", None)
-    open(path, "w").write(json.dumps(manifest))
-    crc = os.path.join(root, f".{names[-1]}.crc")
-    if os.path.exists(crc):  # hadoop local-fs checksum sidecar
-        os.remove(crc)
-
-    reopened = _mk(spark, tmp_path, n_buckets=4)
-    unowned = [b for b in range(4) if str(b) not in {
-        k for k, g in json.loads(open(path).read())["buckets"].items() if g is not None
-    }]
-    if unowned:  # legacy contract: pruned read of never-touched buckets is None
-        assert reopened.read(buckets=unowned[:1]) is None
-
-    # first commit backfills (and has nothing to drift-check against)
-    _commit_rows(spark, reopened, [(3, "c")], version=1)
-    m1 = json.loads((tmp_path / "state" / "manifest-1.json").read_text())
-    assert "schema" in m1
-    # the typed-empty contract now holds: empty a bucket, read it pruned
-    seed = reopened.with_bucket(spark.createDataFrame([(1, "a")], "k long, v string"))
-    keep = [r[0] for r in seed.select(BUCKET_COL).distinct().collect()]
-    all_touched = sorted({r[0] for r in reopened.with_bucket(
-        spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
-    ).select(BUCKET_COL).distinct().collect()})
-    store_wide = seed  # complete rows for every touched bucket: only key 1 survives
-    reopened.commit(store_wide, all_touched, version=2)
-    emptied = [b for b in all_touched if b not in keep]
-    if emptied:
-        pruned = reopened.read(buckets=emptied)
-        assert pruned is not None and pruned.count() == 0
-        assert {f.name for f in pruned.schema.fields} == {"k", "v", BUCKET_COL}
 
 
 def test_savepoint_failure_after_write_cleans_partial_gen0(spark, tmp_path):

@@ -1311,7 +1311,7 @@ def _run_ttl_tombstone_pipeline(spark, tmp_path, batches, ttl):
     micro-batch, run through run_compacted_aggregate with op_col +
     unavailable_col + the event-time horizon; returns (final sink
     rows keyed (id, live_keys, val), persisted watermark, store)."""
-    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.state_ttl import TTLStateStore
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -1347,7 +1347,7 @@ def _run_ttl_tombstone_pipeline(spark, tmp_path, batches, ttl):
     )
     q.processAllAvailable()
     q.stop()
-    store = TTLStateStore(
+    store = GenerationalStateStore(
         spark, str(tmp_path / "state" / "state"), ["id"], n_buckets=4,
         ttl_col="ts_ms", ttl=ttl,
     )
