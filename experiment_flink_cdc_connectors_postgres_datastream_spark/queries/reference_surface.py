@@ -497,7 +497,6 @@ def cdc_pipeline_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             op_col="op",
             sink=sink,
             query_name="cdc_pipeline_streamed",
-            n_buckets=8,  # single micro-batch demo run: fewer, larger state files
         )
         q.processAllAvailable()
         q.stop()
@@ -812,7 +811,6 @@ def changelog_agg_multi_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg_exprs=_multi_aggs(),
             sink=sink,
             query_name="changelog_agg_multi_streamed",
-            n_buckets=8,
         )
         q.processAllAvailable()
         q.stop()
@@ -1048,7 +1046,6 @@ def bus_roundtrip_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             op_col="op",
             sink=sink,
             query_name="bus_roundtrip_streamed",
-            n_buckets=8,
         )
         q.processAllAvailable()
         # publish #1 while the query runs: the tail of the topic
@@ -1601,9 +1598,7 @@ def cdc_toast_pipeline_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.processAllAvailable()
         q.stop()
-        store = GenerationalStateStore(
-            spark, os.path.join(work, "state", "state"), ["id"], n_buckets=64
-        )
+        store = GenerationalStateStore(spark, os.path.join(work, "state", "state"), ["id"])
         live = store.read().filter(~F.col("op").eqNullSafe(F.lit(DELETE_OP)))
         pdf = live.select(
             F.col("id").cast("bigint").alias("id"), "lang", "body"
@@ -1811,7 +1806,6 @@ def cdc_ttl_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             sink=sink,
             query_name="cdc_ttl_streamed",
-            n_buckets=8,
             unavailable_col="unavailable",
             ttl_col="ts_ms",
             ttl=_TTL_HORIZON,
@@ -1891,7 +1885,6 @@ def cdc_ttl_restart_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
                 sink=sink,
                 query_name="cdc_ttl_restart_streamed",
-                n_buckets=8,
                 unavailable_col="unavailable",
                 ttl_col="ts_ms",
                 ttl=_TTL_HORIZON,
@@ -2229,7 +2222,6 @@ def cdc_ttl_wal2json_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             sink=sink,
             query_name="cdc_ttl_wal2json_streamed",
-            n_buckets=8,
             unavailable_col="unavailable",
             ttl_col="ts_ms",
             ttl=_TTL_HORIZON,

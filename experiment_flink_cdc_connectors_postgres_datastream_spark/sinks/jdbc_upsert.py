@@ -35,6 +35,7 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.compact
 )
 from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
     BUCKET_COL,
+    DEFAULT_N_BUCKETS,
     GenerationalStateStore,
 )
 
@@ -254,7 +255,7 @@ class ParquetUpsertSink:
     """
 
     def __init__(self, path: str, key_cols: list[str], seq_cols: list[str] | None = None,
-                 n_buckets: int = 8, refresh: bool = False,
+                 n_buckets: int = DEFAULT_N_BUCKETS, refresh: bool = False,
                  bucket_cols: list[str] | None = None):
         self.path = path
         self.key_cols = key_cols

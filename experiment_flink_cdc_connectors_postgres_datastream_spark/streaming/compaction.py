@@ -32,6 +32,7 @@ from experiment_flink_cdc_connectors_postgres_datastream_spark.cdc.changelog imp
 )
 from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
     BUCKET_COL,
+    DEFAULT_N_BUCKETS,
     GenerationalStateStore,
 )
 
@@ -167,7 +168,7 @@ def run_compacted_aggregate(
     sink: Callable[[DataFrame, int], None] | None = None,
     checkpoint_dir: str | None = None,
     query_name: str = "compacted_aggregate",
-    n_buckets: int = 64,
+    n_buckets: int = DEFAULT_N_BUCKETS,
     unavailable_col: str | None = None,
     ttl_col: str | None = None,
     ttl: int | None = None,
@@ -186,6 +187,10 @@ def run_compacted_aggregate(
     Restart-safe: the checkpoint tracks source progress, the merge is
     idempotent (last-write-wins by seq), and a replayed batch rewrites
     the same generation.
+
+    ``n_buckets`` sizes a new store (a reopened one keeps its
+    manifest's); the default 8 fits batches that touch every bucket,
+    as the store's cost model (:mod:`.statestore`) explains.
 
     ``ttl_col``/``ttl`` (both None by default = the reference's
     idle-state-retention-0 semantics, sql-client-conf.yaml:16-17)

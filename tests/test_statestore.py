@@ -800,27 +800,21 @@ def test_commit_writes_one_file_per_bucket(spark, tmp_path):
         assert len([f for f in d.iterdir() if f.name.endswith(".parquet")]) == 1, d
 
 
-def test_read_with_recorded_schema_fires_no_spark_job(spark, tmp_path):
-    """read() takes the schema the manifest records instead of
-    inferring it from parquet footers, so building the state frame
-    runs no job. The control read afterwards infers a schema in a
-    second group; once the status tracker has seen that job, it has
-    seen every earlier one, so the empty first group is not a
-    listener-bus lag."""
+def _assert_fires_no_spark_job(spark, action, control_dir):
+    """Run ``action`` in a job group of its own and assert it fired no
+    Spark job. A control read of ``control_dir`` afterwards infers a
+    schema in a second group; once the status tracker has seen that
+    job, it has seen every earlier one, so the empty first group is not
+    a listener-bus lag."""
     import time
 
-    store = _mk(spark, tmp_path, n_buckets=4)
-    _commit_rows(spark, store, [(k, f"v{k}") for k in range(20)], version=0)
-    _commit_rows(spark, store, [(1, "w1")], version=1)
-    assert store.gen_count() == 2  # the read unions two generations
     sc = spark.sparkContext
     prev = sc.getLocalProperty("spark.jobGroup.id")
     try:
-        sc.setJobGroup("test-statestore-declared", "read, recorded schema")
-        store.read()
-        store.read(buckets=[0, 1])
+        sc.setJobGroup("test-statestore-declared", "no job expected")
+        action()
         sc.setJobGroup("test-statestore-inferred", "control: schema inference")
-        spark.read.parquet(str(tmp_path / "state" / "gen-0"))
+        spark.read.parquet(str(control_dir))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
     tracker = sc.statusTracker()
@@ -829,34 +823,86 @@ def test_read_with_recorded_schema_fires_no_spark_job(spark, tmp_path):
         assert time.monotonic() < deadline, "control read fired no job"
         time.sleep(0.05)
     assert tracker.getJobIdsForGroup("test-statestore-declared") == []
+
+
+def test_read_with_recorded_schema_fires_no_spark_job(spark, tmp_path):
+    """read() takes the schema the manifest records instead of
+    inferring it from parquet footers, so building the state frame
+    runs no job."""
+    store = _mk(spark, tmp_path, n_buckets=4)
+    _commit_rows(spark, store, [(k, f"v{k}") for k in range(20)], version=0)
+    _commit_rows(spark, store, [(1, "w1")], version=1)
+    assert store.gen_count() == 2  # the read unions two generations
+
+    def reads():
+        store.read()
+        store.read(buckets=[0, 1])
+
+    _assert_fires_no_spark_job(spark, reads, tmp_path / "state" / "gen-0")
     assert {(r["k"], r["v"]) for r in store.read().collect()} == (
         {(k, f"v{k}") for k in range(20) if k != 1} | {(1, "w1")}
     )
 
 
-def test_ttl_single_generation_invariant_is_loud_not_assert(spark, tmp_path):
-    """ADVICE r13: the commit-time single-generation invariant must
-    survive `python -O` — a stripped assert would let the watermark
-    read-back pop an arbitrary generation and silently under-advance
-    expiry. Pinned as an explicit RuntimeError on a store whose
-    manifest (maliciously monkeypatched) maps the touched buckets to
-    two generations."""
-    import pytest
+def test_full_read_of_default_store_fires_no_listing_job(spark, tmp_path):
+    """A store at the default bucket count has at most 8 ``_bucket=``
+    dirs per generation, under the 32 above which Spark lists a
+    directory with a Spark job of its own
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``), so a
+    full read() with every bucket owned lists serially and fires no
+    job."""
+    store = GenerationalStateStore(spark, str(tmp_path / "state"), ["k"])
+    _commit_rows(spark, store, [(k, f"v{k}") for k in range(1000)], version=0)
+    buckets = store._current_manifest()["buckets"]
+    assert len(buckets) == store.n_buckets
+    assert set(buckets.values()) == {"gen-0"}  # every bucket owned
+    _assert_fires_no_spark_job(spark, store.read, tmp_path / "state" / "gen-0")
+    assert store.read().count() == 1000
+
+
+def test_ttl_commit_takes_the_written_generation_without_a_manifest_reread(
+    spark, tmp_path, monkeypatch
+):
+    """commit knows the generation it wrote, so the TTL watermark
+    advance reads that generation back without loading the manifest it
+    just published: a TTL commit loads the current manifest once (for
+    its drift check) and still moves ``_ttl.json`` to the written
+    generation's max ``ttl_col``; an all-empty commit wrote no rows and
+    reads nothing back."""
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming import statestore as ss
 
     store = GenerationalStateStore(
-        spark, str(tmp_path / "state"), ["k"], n_buckets=2, ttl_col="ts", ttl=100
+        spark, str(tmp_path / "state"), ["k"], n_buckets=4, ttl_col="ts", ttl=100
     )
-    df = store.with_bucket(spark.createDataFrame([(1, 10), (2, 20)], "k long, ts long"))
+    _ttl_commit(spark, store, [(1, "a", 10), (2, "b", 20)], 0)
+    df = store.with_bucket(
+        spark.createDataFrame([(1, "a2", 50), (2, "b", 20)], "k long, v string, ts long")
+    )
     touched = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
-    store.commit(df, touched, version=0)  # a normal commit upholds it
-    assert len(touched) == 2  # keys 1/2 hash to distinct buckets (pure fn)
-    committed = store._current_manifest()
-    store._current_manifest = lambda: {
-        **committed, "buckets": {str(b): f"gen-{b}" for b in touched}
-    }
-    df2 = store.with_bucket(spark.createDataFrame([(1, 30), (2, 40)], "k long, ts long"))
-    with pytest.raises(RuntimeError, match="span generations"):
-        store.commit(df2, touched, version=1)
+    empty = store.with_bucket(spark.createDataFrame([], "k long, v string, ts long"))
+    loads, readbacks = [], []
+    real_manifest, real_read = store._current_manifest, ss.read_generation
+
+    def counting_manifest():
+        loads.append(1)
+        return real_manifest()
+
+    def counting_read(spark_, path, schema):
+        readbacks.append(path)
+        return real_read(spark_, path, schema)
+
+    monkeypatch.setattr(store, "_current_manifest", counting_manifest)
+    monkeypatch.setattr(ss, "read_generation", counting_read)
+    store.commit(df, touched, version=1)
+    assert len(loads) == 1
+    assert len(readbacks) == 1 and readbacks[0].endswith("/gen-1"), readbacks
+    assert store._watermark() == 50
+    loads.clear()
+    readbacks.clear()
+    store.commit(empty, list(range(4)), version=2)
+    assert len(loads) == 1
+    assert readbacks == []
+    assert store._watermark() == 50
 
 
 # --------------------------------------- empty-bucket manifest markers (r15)

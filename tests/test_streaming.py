@@ -732,9 +732,7 @@ def test_compacted_aggregate_resolves_toast_across_batches(spark, toast_cdc_dir,
     # the materialized state table is the thing under test
     from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import GenerationalStateStore
 
-    store = GenerationalStateStore(
-        spark, str(tmp_path / "state" / "state"), ["id"], n_buckets=64
-    )
+    store = GenerationalStateStore(spark, str(tmp_path / "state" / "state"), ["id"])
     live = store.read()
     state = {r["id"]: (r["n"], r["body"]) for r in live.collect()}
     assert state[1] == (2, big)
@@ -776,9 +774,7 @@ def test_compacted_aggregate_equal_seq_batch_beats_state(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    store = GenerationalStateStore(
-        spark, str(tmp_path / "state" / "state"), ["id"], n_buckets=64
-    )
+    store = GenerationalStateStore(spark, str(tmp_path / "state" / "state"), ["id"])
     rows = store.read().collect()
     assert [(r["id"], r["seq"], r["v"]) for r in rows] == [(1, 5, "fresh")]
 
@@ -905,6 +901,58 @@ def test_compacted_aggregate_unpersists_a_failed_batch(spark, tmp_path):
         q.processAllAvailable()
     q.stop()
     assert _cache_is_empty(spark)
+
+
+def test_compacted_aggregate_default_store_has_eight_buckets(spark, tmp_path):
+    """Stage-2 state without an explicit ``n_buckets`` is laid out in
+    ``DEFAULT_N_BUCKETS`` (8) buckets, the one default of the store,
+    the aggregate and the parquet upsert sink: every manifest records
+    8, and no generation holds more than 8 ``_bucket=`` dirs even when
+    each batch (200 keys) touches every bucket."""
+    import inspect
+    import json as _json
+
+    from experiment_flink_cdc_connectors_postgres_datastream_spark.streaming.statestore import (
+        BUCKET_COL,
+        DEFAULT_N_BUCKETS,
+        GenerationalStateStore,
+    )
+
+    assert DEFAULT_N_BUCKETS == 8
+    for fn in (GenerationalStateStore.__init__, run_compacted_aggregate, ParquetUpsertSink.__init__):
+        assert inspect.signature(fn).parameters["n_buckets"].default is DEFAULT_N_BUCKETS, fn
+
+    d = tmp_path / "src"
+    d.mkdir()
+    for b in range(2):
+        rows = [_json.dumps({"id": i, "seq": b, "grp": i % 3}) for i in range(200)]
+        (d / f"b{b}.json").write_text("\n".join(rows) + "\n")
+        os.utime(d / f"b{b}.json", (1_700_000_000 + b, 1_700_000_000 + b))
+    stream = spark.readStream.schema("id long, seq long, grp long").option(
+        "maxFilesPerTrigger", 1
+    ).json(str(d))
+    q = run_compacted_aggregate(
+        stream,
+        state_dir=str(tmp_path / "state"),
+        key_cols=["id"],
+        seq_cols=["seq"],
+        group_cols=["grp"],
+        query_name="default_buckets",
+    )
+    q.processAllAvailable()
+    q.stop()
+    root = tmp_path / "state" / "state"
+    manifests = sorted(root.glob("manifest-*.json"))
+    assert [p.name for p in manifests] == ["manifest-0.json", "manifest-1.json"]
+    for p in manifests:
+        manifest = _json.loads(p.read_text())
+        assert manifest["n_buckets"] == 8
+        assert sorted(manifest["buckets"]) == [str(b) for b in range(8)]
+    gens = sorted(root.glob("gen-*"))
+    assert gens
+    for gen in gens:
+        assert len([c for c in gen.iterdir() if c.name.startswith(f"{BUCKET_COL}=")]) <= 8, gen
+    assert set(_json.loads(manifests[-1].read_text())["buckets"].values()) == {"gen-1"}
 
 
 def test_incremental_dedup_foreign_commit_log_never_folds_running_batch(spark, tmp_path):
